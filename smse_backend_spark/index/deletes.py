@@ -20,8 +20,9 @@ Lucene-liveDocs shape:
   the compacted index carries no tombstones.
 
 Scale: a tombstone is 8 bytes. Up to ``InvertedIndex.TOMB_ARRAY_CAP``
-ids, the query path ships ONE sorted numpy array to the scoring kernels
-(a ``searchsorted`` filter — zero extra shuffle). Beyond that the decode
+ids, the query path reads them on the driver into ONE sorted numpy array
+(a ``searchsorted`` filter — zero extra shuffle): the in-process path
+applies it directly, and it is broadcast when a Spark kernel runs. Beyond that the decode
 paths fall back to a distributed left-anti join, and the intended
 lifecycle is to compact: as in Lucene, a deleted fraction beyond a few
 percent is merge time.
@@ -33,8 +34,12 @@ import json
 import os
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from smse_backend_spark.session import local_frame
 
 TOMB_DIR = "tombstones"
 _PREFIX = "tombstone_"
@@ -69,9 +74,11 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> dict:
     column (the scale path — e.g. the ids of a dedup survivor view's
     losers), or an iterable of ints for point deletes."""
     if not isinstance(doc_ids, DataFrame):
-        doc_ids = spark.createDataFrame(
-            [(int(i),) for i in doc_ids], "doc_id long"
-        )
+        # an Arrow-backed local frame: a list would go through a Python
+        # RDD, whose first use in a session costs ~1 s of worker start-up
+        doc_ids = local_frame(spark, "doc_id long", pa.table(
+            {"doc_id": pa.array([int(i) for i in doc_ids], pa.int64())}
+        ))
     n = (committed_deletes(index_dir) or [-1])[-1] + 1
     path = f"{index_dir}/{TOMB_DIR}/commit={n}"
     from pyspark.sql import Observation
@@ -115,13 +122,17 @@ def tombstone_array(
 ) -> np.ndarray | None:
     """Sorted unique tombstone ids for in-kernel filtering, or None when
     there are no deletes OR the set exceeds ``cap`` (caller must then use
-    the join path / compact)."""
-    if not committed_deletes(index_dir):
+    the join path / compact). The committed ``commit=`` dirs are read on
+    the driver with pyarrow — no Spark job (``spark`` is unused; it keeps
+    the signature of the other readers here)."""
+    commits = committed_deletes(index_dir)
+    if not commits or tombstone_count(index_dir) > cap:
         return None
-    if tombstone_count(index_dir) > cap:
-        return None
-    pdf = read_tombstones(spark, index_dir).toPandas()
-    return np.unique(pdf["doc_id"].to_numpy(np.int64))
+    tables = [pq.read_table(f"{index_dir}/{TOMB_DIR}/commit={n}") for n in commits]
+    ids = [t.column("doc_id").to_numpy() for t in tables if t.num_rows]
+    if not ids:
+        return np.empty(0, dtype=np.int64)
+    return np.unique(np.concatenate(ids).astype(np.int64))
 
 
 def replace_docs(

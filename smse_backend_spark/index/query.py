@@ -1,23 +1,38 @@
 """Query-time BM25 top-k over the segment-partitioned index.
 
-Two exact modes:
+Three exact paths answer ``bm25_topk``; all share one scoring kernel
+(:func:`_score_postings`) and one rank rule (6 dp, score desc, doc_id asc):
 
-- ``exhaustive``: decode every matching posting block, score, distributed
-  top-k. The correctness anchor.
-- ``pruned`` (block-max, default): a metadata-only pass reads just the tiny
-  per-block stat columns (``block_max_tf``/``block_min_dl`` — Parquet column
-  pruning never touches the compressed blobs), computes a sound per-segment
-  score upper bound, scores the most promising segments first to obtain a
-  threshold θ, then decodes only segments whose upper bound can still beat
-  θ. This is block-max WAND at segment granularity, re-expressed as two
-  DataFrame jobs instead of a per-posting iterator — the idiomatic Spark
-  shape (driver steers with two tiny actions; all data movement stays
-  declarative). Exactness: every skipped segment has ub < θ ≤ k-th score,
-  so no skipped doc can enter the top-k.
+- **in-process** (``mode="auto"`` for small queries): the driver looks the
+  query terms up in the sorted dictionary with pyarrow, reads the matched
+  posting blocks with pyarrow from the lineage-committed ``batch=`` dirs,
+  only the query terms' ``term_bucket=`` dirs and the ``lang=`` dir when
+  filtered (row groups pruned on the sorted ``term`` column), decodes and
+  scores them in numpy and returns an already-ranked local DataFrame. No
+  Spark job runs: for a few terms over a modest index the work is tens of
+  thousands of postings, and the 7-9 jobs of a Spark plan cost ~10x more
+  than the scoring.
+- ``single_pass``: the same kernel inside one Spark job. Compressed blocks
+  shuffle by segment, each partition scores its docs, a window keeps the
+  global top-k. The big-query default.
+- ``exhaustive`` / ``pruned``: decoded rows scored with Column algebra.
+  ``exhaustive`` decodes every matching block (the correctness anchor);
+  ``pruned`` (block-max) reads only the per-block stat columns first,
+  scores the most promising segments to get a threshold θ, then decodes
+  only segments whose upper bound can still beat θ — block-max WAND at
+  segment granularity. Exact: every skipped segment has ub < θ ≤ k-th
+  score.
 
-Plan shape to expect at scale: partition pruning on (lang, term_bucket,
-batch), predicate pushdown on term, ArrowEvalPython only for block decode,
-and ``TakeOrderedAndProject`` on top.
+Routing for ``mode="auto"`` is by the dictionary df summed over the query
+terms (= the postings the query decodes): below
+``InvertedIndex.INPROC_MAX_POSTINGS`` and with the tombstone set within
+``TOMB_ARRAY_CAP`` the query runs in-process; below
+``PRUNE_MIN_POSTINGS`` on ``single_pass``; above it on ``pruned``. An
+explicit ``mode=`` and ``bm25_topk_batch`` always use the Spark kernels.
+
+Spark plan shape to expect at scale: partition pruning on (lang,
+term_bucket, batch), predicate pushdown on term, ArrowEvalPython only for
+block decode, and ``TakeOrderedAndProject`` on top.
 
 Replaces the reference's per-query exact pgvector scan
 (smse_backend/services/search.py:97-110, which has no ANN index) with a
@@ -27,6 +42,7 @@ sublinear indexed path.
 from __future__ import annotations
 
 import math
+import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -40,6 +56,7 @@ from smse_backend_spark.index import lineage as lin
 from smse_backend_spark.index.codec import decode_blocks, delta_decode
 from smse_backend_spark.index.deletes import live_mask
 from smse_backend_spark.operators.search import query_terms
+from smse_backend_spark.session import local_frame
 
 RESULT_SCHEMA = T.StructType(
     [T.StructField("doc_id", T.LongType()), T.StructField("score", T.DoubleType())]
@@ -52,24 +69,53 @@ DECODED_SCHEMA = "term string, doc_id long, tf long, dl long"
 SLICE_SALT = "-slice-v1"
 
 
+def _decode_frame(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Posting blocks (term, first_doc, gaps, tfs, dls) -> one decoded
+    (term, doc_id, tf, dl) row per posting."""
+    gaps, counts = decode_blocks(list(pdf["gaps"]))
+    tfs, _ = decode_blocks(list(pdf["tfs"]))
+    dls, _ = decode_blocks(list(pdf["dls"]))
+    doc_ids = delta_decode(
+        gaps.astype(np.int64), pdf["first_doc"].to_numpy(np.int64), counts
+    )
+    return pd.DataFrame(
+        {
+            "term": np.repeat(pdf["term"].to_numpy(), counts),
+            "doc_id": doc_ids,
+            "tf": tfs.astype(np.int64),
+            "dl": dls.astype(np.int64),
+        }
+    )
+
+
 def _decode_map(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
-        if pdf.empty:
-            continue
-        gaps, counts = decode_blocks(list(pdf["gaps"]))
-        tfs, _ = decode_blocks(list(pdf["tfs"]))
-        dls, _ = decode_blocks(list(pdf["dls"]))
-        doc_ids = delta_decode(
-            gaps.astype(np.int64), pdf["first_doc"].to_numpy(np.int64), counts
-        )
-        yield pd.DataFrame(
-            {
-                "term": np.repeat(pdf["term"].to_numpy(), counts),
-                "doc_id": doc_ids,
-                "tf": tfs.astype(np.int64),
-                "dl": dls.astype(np.int64),
-            }
-        )
+        if not pdf.empty:
+            yield _decode_frame(pdf)
+
+
+# past this many terms _terms_filter switches to ``is_in``: an OR costs one
+# comparison pass per term (2,000 terms took 2.4 s against 14 ms for
+# ``is_in`` on a 400k-term dictionary), and a deep OR chain overflows the
+# stack of pyarrow's recursive expression code (10,000 terms crash)
+OR_FILTER_MAX_TERMS = 32
+
+
+def _terms_filter(terms):
+    """pyarrow predicate ``term`` in ``terms``. Up to
+    ``OR_FILTER_MAX_TERMS`` terms it is an OR of equalities: pyarrow prunes
+    Parquet row groups on min/max stats for ``==`` but not for ``is_in``,
+    and the dictionary and posting files are sorted by term, so this form
+    reads only the row groups holding a query term."""
+    import functools
+    import operator
+
+    import pyarrow.dataset as ds
+
+    terms = list(terms)
+    if len(terms) > OR_FILTER_MAX_TERMS:
+        return ds.field("term").isin(terms)
+    return functools.reduce(operator.or_, (ds.field("term") == t for t in terms))
 
 
 def _levenshtein_band(a: str, b: str, d: int) -> int:
@@ -156,6 +202,82 @@ def _damerau_within(a: str, b: str, d: int) -> bool:
     return _damerau_levenshtein(a, b) <= d
 
 
+# guard for rounding-induced rank flips near the k boundary: each scoring
+# unit keeps its top-(k + SCORE_PAD) rows per query
+SCORE_PAD = 32
+
+
+def _score_postings(
+    pdf: pd.DataFrame, term_ix: dict[str, int], w_mat: np.ndarray,
+    qids: np.ndarray, avgdl: float, k: int, tomb: np.ndarray | None = None,
+) -> pd.DataFrame | None:
+    """BM25-score decoded postings (term, doc_id, tf, dl) for every query
+    at once -> each query's top-(k+pad) rows (query_id, doc_id, score),
+    scores rounded to 6 dp, ordered (score desc, doc_id asc); None when no
+    doc scores. ``w_mat`` is the (term x query) idf weight matrix.
+
+    The one scoring code path: the Spark batch kernel runs it per
+    partition and the in-process path runs it on the driver. A doc's
+    postings must all be in ``pdf`` (segments are disjoint doc-id ranges,
+    so a segment-partitioned shuffle guarantees it).
+    """
+    if tomb is not None:
+        # soft-delete filter: drop tombstoned docs before scoring (a
+        # post-top-k filter would let deleted docs displace survivors)
+        pdf = pdf[live_mask(tomb, pdf["doc_id"].to_numpy(np.int64))]
+        if pdf.empty:
+            return None
+    tf = pdf["tf"].to_numpy(np.float64)
+    dl = pdf["dl"].to_numpy(np.float64)
+    tfn = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    t_idx = pdf["term"].map(term_ix).to_numpy(np.int64)
+    # dense (postings x queries) contributions, grouped by doc: one
+    # C-path groupby-sum instead of scalar scatter-adds
+    contrib = pd.DataFrame(tfn[:, None] * w_mat[t_idx])
+    contrib["__doc"] = pdf["doc_id"].to_numpy()
+    scores = contrib.groupby("__doc", sort=False).sum()
+    doc_ids = scores.index.to_numpy(np.int64)
+    # transpose to contiguous per-query rows (the docs x queries layout
+    # strides 8*n_queries bytes per element down a column — measured
+    # ~16% of batch wall-clock at 64 queries x 1.5 M docs) and round
+    # ONCE, vectorized, instead of per-query on the nonzero subset
+    mat = np.round(np.ascontiguousarray(scores.to_numpy().T), 6)
+
+    kk = min(k + SCORE_PAD, mat.shape[1])
+    out_q, out_d, out_s = [], [], []
+    for j in range(mat.shape[0]):
+        col = mat[j]
+        nz = np.flatnonzero(col > 0.0)
+        if nz.size == 0:
+            continue
+        # deterministic candidate cut: partition on the ROUNDED scores
+        # and keep every row tying the kk-th rounded score, so the kept
+        # set is exactly the (score desc, doc_id asc) prefix —
+        # tie-heavy partitions (replica corpora) stay rank-identical to
+        # the scan/pruned paths instead of keeping an arbitrary subset
+        sc_nz = col[nz]
+        take, sc = nz, sc_nz
+        if nz.size > kk:
+            part = np.argpartition(-sc_nz, kk - 1)
+            thresh = sc_nz[part[kk - 1]]
+            keep = np.flatnonzero(sc_nz >= thresh)
+            take, sc = nz[keep], sc_nz[keep]
+        order = np.lexsort((doc_ids[take], -sc))[:kk]
+        n = order.size
+        out_q.append(np.full(n, qids[j], dtype=np.int64))
+        out_d.append(doc_ids[take][order])
+        out_s.append(sc[order])
+    if not out_q:
+        return None
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "doc_id": np.concatenate(out_d),
+            "score": np.concatenate(out_s),
+        }
+    )
+
+
 def _make_batch_scorer(
     term_ix: dict[str, int], w_mat: np.ndarray, qids: np.ndarray, avgdl: float,
     k: int, tomb_b=None,
@@ -168,69 +290,18 @@ def _make_batch_scorer(
     exactly one partition and the shuffle moves only compressed bytes.
     Emits each query's local top-(k+pad) rows (score desc, doc_id asc).
     """
-    from smse_backend_spark import B, K1
-
-    pad = 32  # guard for rounding-induced rank flips near the k boundary
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parts = [p for p in _decode_map(batches) if not p.empty]
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        if tomb_b is not None:
-            # soft-delete filter: drop tombstoned docs before scoring (a
-            # post-top-k filter would let deleted docs displace survivors)
-            pdf = pdf[live_mask(tomb_b.value, pdf["doc_id"].to_numpy(np.int64))]
-            if pdf.empty:
-                return
-        tf = pdf["tf"].to_numpy(np.float64)
-        dl = pdf["dl"].to_numpy(np.float64)
-        tfn = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-        t_idx = pdf["term"].map(term_ix).to_numpy(np.int64)
-        # dense (postings x queries) contributions, grouped by doc: one
-        # C-path groupby-sum instead of scalar scatter-adds
-        contrib = pd.DataFrame(tfn[:, None] * w_mat[t_idx])
-        contrib["__doc"] = pdf["doc_id"].to_numpy()
-        scores = contrib.groupby("__doc", sort=False).sum()
-        doc_ids = scores.index.to_numpy(np.int64)
-        # transpose to contiguous per-query rows (the docs x queries layout
-        # strides 8*n_queries bytes per element down a column — measured
-        # ~16% of batch wall-clock at 64 queries x 1.5 M docs) and round
-        # ONCE, vectorized, instead of per-query on the nonzero subset
-        mat = np.round(np.ascontiguousarray(scores.to_numpy().T), 6)
-
-        kk = min(k + pad, mat.shape[1])
-        out_q, out_d, out_s = [], [], []
-        for j in range(mat.shape[0]):
-            col = mat[j]
-            nz = np.flatnonzero(col > 0.0)
-            if nz.size == 0:
-                continue
-            # deterministic candidate cut: partition on the ROUNDED scores
-            # and keep every row tying the kk-th rounded score, so the kept
-            # set is exactly the (score desc, doc_id asc) prefix —
-            # tie-heavy partitions (replica corpora) stay rank-identical to
-            # the scan/pruned paths instead of keeping an arbitrary subset
-            sc_nz = col[nz]
-            take, sc = nz, sc_nz
-            if nz.size > kk:
-                part = np.argpartition(-sc_nz, kk - 1)
-                thresh = sc_nz[part[kk - 1]]
-                keep = np.flatnonzero(sc_nz >= thresh)
-                take, sc = nz[keep], sc_nz[keep]
-            order = np.lexsort((doc_ids[take], -sc))[:kk]
-            n = order.size
-            out_q.append(np.full(n, qids[j], dtype=np.int64))
-            out_d.append(doc_ids[take][order])
-            out_s.append(sc[order])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "doc_id": np.concatenate(out_d),
-                    "score": np.concatenate(out_s),
-                }
-            )
+        out = _score_postings(
+            pdf, term_ix, w_mat, qids, avgdl, k,
+            None if tomb_b is None else tomb_b.value,
+        )
+        if out is not None:
+            yield out
 
     return kernel
 
@@ -787,9 +858,12 @@ def _tf_norm(tf_col, dl_col, avgdl: float):
 class InvertedIndex:
     """Reader handle over an index directory produced by ``build_index``."""
 
-    # vocabularies up to this size are collected to the driver once and kept
-    # as a plain dict — removes one Spark job per query. Bigger vocabularies
-    # (the 10^12-file regime) fall back to pruned parquet lookups.
+    # the dictionary expansion walks (expand_prefix / expand_fuzzy /
+    # expand_regex, suggest, complete*, rare_terms) run over the whole
+    # vocabulary: up to this size it is collected to the driver once and
+    # walked as a plain dict; bigger vocabularies (the 10^12-file regime)
+    # walk it as a Spark scan. Point lookups (term_df / term_cf) never use
+    # the cache — they are pyarrow reads at any vocabulary size.
     DICT_CACHE_MAX_TERMS = 500_000
 
     # tombstone sets up to this size ship to the scoring kernels as ONE
@@ -834,7 +908,8 @@ class InvertedIndex:
         self._dict_cache: dict[tuple[str, str], int] | None = None
         self._cf_cache: dict[tuple[str, str], int] | None = None
         self._tomb_loaded = False
-        self._tomb_bcast = None  # sc.broadcast of the sorted id array
+        self._tomb_arr: np.ndarray | None = None  # sorted ids (small sets)
+        self._tomb_b = None  # its broadcast, made when a Spark kernel runs
         self._tomb_df: DataFrame | None = None  # join fallback (big sets)
         self.analyzer = self.meta.get("config", {}).get("analyzer", "standard")
         self.synonyms = self.meta.get("config", {}).get("synonyms") or {}
@@ -875,21 +950,33 @@ class InvertedIndex:
             return
         from smse_backend_spark.index import deletes
 
-        arr = deletes.tombstone_array(self.spark, self.path, self.TOMB_ARRAY_CAP)
-        if arr is not None:
-            self._tomb_bcast = self.spark.sparkContext.broadcast(arr)
-        else:
+        self._tomb_arr = deletes.tombstone_array(
+            self.spark, self.path, self.TOMB_ARRAY_CAP
+        )
+        if self._tomb_arr is None:
             self._tomb_df = deletes.read_tombstones(self.spark, self.path)
         self._tomb_loaded = True
+
+    def _reset_tombs(self) -> None:
+        """Forget the loaded tombstones; the next query reloads them."""
+        self._tomb_loaded = False
+        self._tomb_arr = self._tomb_b = self._tomb_df = None
+
+    @property
+    def _tomb_bcast(self):
+        """Broadcast of the tombstone array for the Spark kernels (None
+        when there is no small tombstone set); broadcast on first use, so
+        queries answered in-process never ship it."""
+        if self._tomb_b is None and self._tomb_arr is not None:
+            self._tomb_b = self.spark.sparkContext.broadcast(self._tomb_arr)
+        return self._tomb_b
 
     def _live(self, decoded: DataFrame) -> DataFrame:
         """Drop tombstoned docs from a decoded (doc_id, ...) frame."""
         self._load_tombs()
-        if self._tomb_bcast is not None:
+        if self._tomb_arr is not None:
             tdf = F.broadcast(
-                self.spark.createDataFrame(
-                    pd.DataFrame({"doc_id": self._tomb_bcast.value})
-                )
+                self.spark.createDataFrame(pd.DataFrame({"doc_id": self._tomb_arr}))
             )
             return decoded.join(tdf, "doc_id", "left_anti")
         if self._tomb_df is not None:
@@ -923,40 +1010,13 @@ class InvertedIndex:
             self._cf_cache = {(r["lang"], r["term"]): r["cf"] for r in rows}
 
     def term_df(self, terms: list[str], lang: str | None = None) -> dict[str, int]:
-        if self.as_of is not None:
-            # historical df from the pruned blocks' metadata columns (one
-            # posting per (doc, term) => df = sum of block counts); the
-            # same partition-pruned files the query decodes anyway
-            return {
-                r["term"]: int(r["df"])
-                for r in self._blocks(terms, lang)
-                .groupBy("term").agg(F.sum("n").alias("df")).collect()
-            }
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            if lang is None:
-                out: dict[str, int] = {}
-                for (_lg, t), df in self._dict_cache.items():
-                    if t in terms:
-                        out[t] = out.get(t, 0) + df
-                return out
-            return {
-                t: self._dict_cache[(lang, t)]
-                for t in terms
-                if (lang, t) in self._dict_cache
-            }
-        d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
-            F.col("term").isin(terms)
-        )
-        if lang is not None:
-            d = d.filter(F.col("lang") == lang)
-        return {
-            r["term"]: r["df"]
-            for r in d.groupBy("term").agg(F.sum("df").alias("df")).collect()
-        }
+        """Document frequency per term (absent terms are left out): one
+        pyarrow point lookup in the sorted dictionary; under time travel,
+        summed from the pruned blocks' ``n`` (one posting per (doc, term))."""
+        return self._term_stat(terms, lang, "df", "n")
 
     def term_idf(self, terms: list[str], lang: str | None = None) -> dict[str, float]:
-        """idf per term from the dictionary (driver cache or pruned read)."""
+        """idf per term from the dictionary (a pyarrow point lookup)."""
         n, _ = self.corpus_stats(lang)
         return {
             t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
@@ -965,37 +1025,35 @@ class InvertedIndex:
 
     def term_cf(self, terms: list[str], lang: str | None = None) -> dict[str, int]:
         """Collection frequency (total occurrences) per term — the
-        dictionary's ``cf`` column (driver cache or pruned read); under
-        time travel, summed from the pruned blocks' ``block_sum_tf``."""
+        dictionary's ``cf`` column; under time travel, summed from the
+        pruned blocks' ``block_sum_tf``."""
+        return self._term_stat(terms, lang, "cf", "block_sum_tf")
+
+    def _term_stat(
+        self, terms: list[str], lang: str | None, dict_col: str, block_col: str
+    ) -> dict[str, int]:
+        """Sum of a per-(lang, term) stat over langs (or for one ``lang``),
+        read on the driver with pyarrow: the dictionary's ``dict_col``, or
+        under time travel (the dictionary is as-of-latest) the pruned
+        blocks' ``block_col``. No Spark job at any vocabulary size."""
+        import pyarrow.dataset as ds
+
+        terms = sorted(set(terms))
+        if not terms:
+            return {}
         if self.as_of is not None:
-            return {
-                r["term"]: int(r["cf"])
-                for r in self._blocks(terms, lang)
-                .groupBy("term").agg(F.sum("block_sum_tf").alias("cf"))
-                .collect()
-            }
-        if self.meta.get("n_terms", 1 << 62) <= self.DICT_CACHE_MAX_TERMS:
-            self._ensure_dict_cache()
-            if lang is None:
-                out: dict[str, int] = {}
-                for (_lg, t), cf in self._cf_cache.items():
-                    if t in terms:
-                        out[t] = out.get(t, 0) + cf
-                return out
-            return {
-                t: self._cf_cache[(lang, t)]
-                for t in terms
-                if (lang, t) in self._cf_cache
-            }
-        d = self.spark.read.parquet(f"{self.path}/dictionary").filter(
-            F.col("term").isin(terms)
-        )
-        if lang is not None:
-            d = d.filter(F.col("lang") == lang)
-        return {
-            r["term"]: int(r["cf"])
-            for r in d.groupBy("term").agg(F.sum("cf").alias("cf")).collect()
-        }
+            tbl = self._read_blocks(terms, lang, ["term", block_col])
+            col = block_col
+        else:
+            flt = _terms_filter(terms)
+            if lang is not None:
+                flt = flt & (ds.field("lang") == lang)
+            tbl = ds.dataset(f"{self.path}/dictionary", format="parquet").to_table(
+                columns=["term", dict_col], filter=flt
+            )
+            col = dict_col
+        agg = tbl.group_by("term").aggregate([(col, "sum")])
+        return dict(zip(agg["term"].to_pylist(), agg[f"{col}_sum"].to_pylist()))
 
     def _sum_dl(self, lang: str | None = None) -> int:
         """Exact total token count of the (possibly lang-restricted,
@@ -1031,7 +1089,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         cfs = self.term_cf(terms, lang) if terms else {}
         if not cfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         t_plus_1 = float(self._sum_dl(lang)) + 1.0
         mup = {
             t: float(mu) * ((float(cf) + 1.0) / t_plus_1)
@@ -1056,20 +1114,68 @@ class InvertedIndex:
 
     # -- scans ------------------------------------------------------------
 
-    def _blocks(self, terms: list[str], lang: str | None) -> DataFrame:
+    def _batch_dirs(self) -> list[str]:
+        """Posting dirs of the lineage-committed batches (``<= as_of``
+        under time travel). A ``batch=N`` dir without its lineage JSON —
+        left by a crashed build or extend — is never read: N and df do not
+        count its docs."""
+        return [
+            f"{self.path}/postings/batch={b}"
+            for b in sorted(lin.committed_batches(self.path))
+            if self.as_of is None or b <= self.as_of
+        ]
+
+    def _term_buckets(self, terms: list[str]) -> list[int]:
         from smse_backend_spark.index.build import term_bucket_py
 
         nb = self.meta["config"]["n_buckets"]
-        buckets = sorted({term_bucket_py(t, nb) for t in terms})
-        df = self.spark.read.parquet(f"{self.path}/postings").filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
+        return sorted({term_bucket_py(t, nb) for t in terms})
+
+    def _blocks(self, terms: list[str], lang: str | None) -> DataFrame:
+        buckets = self._term_buckets(terms)
+        df = (
+            self.spark.read.option("basePath", f"{self.path}/postings")
+            .parquet(*self._batch_dirs())
+            .filter(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
         )
-        if self.as_of is not None:
-            # time travel: partition-pruned to the historical batches
-            df = df.filter(F.col("batch") <= self.as_of)
         if lang is not None:
             df = df.filter(F.col("lang") == lang)
         return df
+
+    def _block_files(self, terms: list[str], lang: str | None) -> list[str]:
+        """The posting files ``_blocks`` would scan, listed on the driver:
+        committed batches, the query terms' buckets, one lang when given."""
+        from urllib.parse import unquote
+
+        buckets = self._term_buckets(terms)
+        files = []
+        for bdir in self._batch_dirs():
+            langs = os.listdir(bdir) if os.path.isdir(bdir) else []
+            for ldir in sorted(langs):
+                if not ldir.startswith("lang="):
+                    continue
+                if lang is not None and unquote(ldir[len("lang="):]) != lang:
+                    continue
+                for b in buckets:
+                    d = f"{bdir}/{ldir}/term_bucket={b}"
+                    if os.path.isdir(d):
+                        files += [f"{d}/{f}" for f in sorted(os.listdir(d))
+                                  if f.endswith(".parquet")]
+        return files
+
+    def _read_blocks(self, terms: list[str], lang: str | None, columns: list[str]):
+        """``columns`` of the posting blocks of ``terms`` as a pyarrow
+        Table, read on the driver with the pruning of :meth:`_blocks`
+        (directories, then row groups on the sorted term column)."""
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        files = self._block_files(terms, lang)
+        if not files:
+            return pa.table({c: pa.array([], pa.int64()) for c in columns})
+        return ds.dataset(files, format="parquet").to_table(
+            columns=columns, filter=_terms_filter(terms)
+        )
 
     def _score(
         self,
@@ -1149,7 +1255,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         decoded = self._decoded(self._blocks(sorted(idf), lang))
         per_doc = (
             decoded.join(self._idf_df(idf), "term")
@@ -1193,7 +1299,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks(sorted(idf), lang)
         return self._finish(
             self._score(blocks, idf, avgdl, dl_range=(dl_lo, dl_hi)), k
@@ -1207,6 +1313,16 @@ class InvertedIndex:
     # decodes >2M postings/sec/core). Above it — hot terms at billion-doc
     # scale — skipping cold segments dominates. Both paths are exact.
     PRUNE_MIN_POSTINGS = 20_000_000
+
+    # mode="auto" answers on the driver (pyarrow read + the numpy kernel,
+    # no Spark job) below this many matched postings (the summed dictionary
+    # df of the query terms). At local[4] the driver path won at every size
+    # measured, up to 3.6 M postings (1.16 s against 2.18 s single_pass):
+    # ~58 ms + 0.31 us/posting against ~580 ms + 0.45 us/posting. More cores
+    # shrink only the Spark slope; scaled linearly the crossover falls to
+    # ~6 M postings at 8 cores and ~2.7 M at 16. The bound also caps the
+    # driver's per-query decode memory.
+    INPROC_MAX_POSTINGS = 4_000_000
 
     def bm25_topk(
         self,
@@ -1378,7 +1494,7 @@ class InvertedIndex:
         """
         seq = self._analyze(query_text)
         if not seq:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         terms: set[str] = set()
         for t in seq:
             budget = self.auto_fuzziness(t)
@@ -1483,7 +1599,7 @@ class InvertedIndex:
         term (fixed or expanded) with its own idf."""
         seq = self._analyze_seq(query_text)
         if not seq:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         expansions = self.expand_prefix(seq[-1], lang, max_expansions)
         terms = sorted(set(seq[:-1]) | set(expansions))
         return self._topk_for_terms(terms, k, lang, mode)
@@ -1520,9 +1636,9 @@ class InvertedIndex:
         t = toks[0]
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         if t not in self.term_df([t], lang):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks([t], lang).select(
             "segment", "term", "first_doc", "gaps", "tfs", "dls", "poss"
         )
@@ -1536,7 +1652,7 @@ class InvertedIndex:
         matches = matches.cache()
         df_sf = matches.count()
         if df_sf == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = math.log(1.0 + (n - df_sf + 0.5) / (df_sf + 0.5))
         scored = matches.select(
             "doc_id",
@@ -1572,10 +1688,10 @@ class InvertedIndex:
             )
         exp = self.expand_prefix(prefix, lang, max_expansions)
         if not exp:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks(sorted(exp), lang).select(
             "segment", "term", "first_doc", "gaps", "tfs", "dls", "poss"
         )
@@ -1598,7 +1714,7 @@ class InvertedIndex:
         matches = matches.cache()
         df_sm = matches.count()
         if df_sm == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = math.log(1.0 + (n - df_sm + 0.5) / (df_sm + 0.5))
         scored = matches.select(
             "doc_id",
@@ -1647,9 +1763,9 @@ class InvertedIndex:
             raise ValueError("span_not include and exclude terms must differ")
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         if inc not in self.term_df([inc], lang):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks([inc, exc], lang).select(
             "segment", "term", "first_doc", "gaps", "tfs", "dls", "poss"
         )
@@ -1667,7 +1783,7 @@ class InvertedIndex:
         matches = matches.cache()
         df_sn = matches.count()
         if df_sn == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = math.log(1.0 + (n - df_sn + 0.5) / (df_sn + 0.5))
         scored = matches.select(
             "doc_id",
@@ -1697,11 +1813,11 @@ class InvertedIndex:
         non-positional index too."""
         terms = self._analyze(terms_text)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         live = sorted(set(terms))
         n, avgdl = self.corpus_stats(lang)
         if not n or not self.term_df(live, lang):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         decoded = self._decoded(self._blocks(live, lang))
         matches = (
             decoded.groupBy("doc_id")
@@ -1713,7 +1829,7 @@ class InvertedIndex:
         )
         df_or = matches.count()
         if df_or == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = math.log(1.0 + (n - df_or + 0.5) / (df_or + 0.5))
         scored = matches.select(
             "doc_id",
@@ -1748,7 +1864,7 @@ class InvertedIndex:
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
         if not dfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         rare = sorted(
             t for t, df in dfs.items()
             if float(df) / float(n) <= float(cutoff_freq)
@@ -1807,10 +1923,10 @@ class InvertedIndex:
             raise ValueError("span_contain terms must be distinct")
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         terms = sorted({*big, *little})
         if len(self.term_df(terms, lang)) != 3:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks(terms, lang).select(
             "segment", "term", "first_doc", "gaps", "tfs", "dls", "poss"
         )
@@ -1831,7 +1947,7 @@ class InvertedIndex:
         matches = matches.cache()
         df_sp = matches.count()
         if df_sp == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = math.log(1.0 + (n - df_sp + 0.5) / (df_sp + 0.5))
         scored = matches.select(
             "doc_id",
@@ -1885,11 +2001,11 @@ class InvertedIndex:
                              "MatchNoDocsQuery) — add a positive clause")
         leaves, positive = collect_leaves(root)
         n, avgdl = self.corpus_stats(lang)
-        empty = self.spark.createDataFrame(
-            [], "doc_id long, leaf int, tf long, dl long"
+        empty = local_frame(
+            self.spark, "doc_id long, leaf int, tf long, dl long"
         )
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
 
         frames = [empty]
         for i, leaf in enumerate(leaves):
@@ -2019,7 +2135,7 @@ class InvertedIndex:
         leaves, positive = collect_qs_leaves(root)
         n, avgdl = self.corpus_stats(None)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
 
         meta_fields = sorted({
             leaf.field for leaf in leaves if leaf.field != DEFAULT_FIELD
@@ -2027,7 +2143,7 @@ class InvertedIndex:
         dv_cols = ["doc_len"] + [f for f in meta_fields if f != "doc_id"]
         base = self._live(self.doc_values(dv_cols))
 
-        empty = self.spark.createDataFrame([], "doc_id long, leaf int, tf long")
+        empty = local_frame(self.spark, "doc_id long, leaf int, tf long")
         frames = [empty]
         big = 1 << 31
         for i, leaf in enumerate(leaves):
@@ -2184,7 +2300,7 @@ class InvertedIndex:
         n, _avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
         if not dfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         # w and ln(N/df) stay separate columns so the contribution is the
         # scan twin's exact (w * tf) * ln association (1-ulp discipline)
         wdf = F.broadcast(self.spark.createDataFrame(
@@ -2343,10 +2459,10 @@ class InvertedIndex:
             raise ValueError("slice_id must be in [0, max_slices)")
         terms = sorted(set(self._analyze(query_text)))
         if not terms:
-            return self.spark.createDataFrame([], "doc_id long, slice int")
+            return local_frame(self.spark, "doc_id long, slice int")
         dfs = self.term_df(terms, lang)
         if any(t not in dfs for t in terms):
-            return self.spark.createDataFrame([], "doc_id long, slice int")
+            return local_frame(self.spark, "doc_id long, slice int")
         m = len(terms)
         blocks = self._blocks(terms, lang)
         if m > 1:
@@ -2409,7 +2525,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if len(idf) < m:  # fewer terms exist than the constraint demands
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks(sorted(idf), lang)
         qual = (
             blocks.groupBy("segment")
@@ -2461,7 +2577,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not scaled:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(scaled), lang), scaled, avgdl)
         return self._finish(scored, k)
 
@@ -2502,7 +2618,7 @@ class InvertedIndex:
             gidf = math.log(1.0 + (n - dfmax + 0.5) / (dfmax + 0.5))
             rows.extend((t, gi, gidf) for t in present)
         if not rows:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         gmap = F.broadcast(
             self.spark.createDataFrame(rows, "term string, gid int, idf double")
         )
@@ -2551,7 +2667,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
         if ex_terms:
             excl = (
@@ -2581,9 +2697,7 @@ class InvertedIndex:
         ids = self.match_doc_ids(query_text, lang)
         row = delete_docs(self.spark, self.path, ids)
         # this handle's tombstone cache is stale now — reload lazily
-        self._tomb_loaded = False
-        self._tomb_bcast = None
-        self._tomb_df = None
+        self._reset_tombs()
         return row
 
     def bm25_topk_boosting(
@@ -2614,7 +2728,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
         factor = F.lit(1.0)
         if neg_terms:
@@ -2681,19 +2795,19 @@ class InvertedIndex:
         # positions are unaffected by the 1:1 stem map)
         terms = self._analyze_seq(phrase_text)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         matches = self._phrase_matches(terms, lang)
         if matches is None:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         # cache: the match set feeds both the phrase-df count and the
         # scored output (it is tiny — only docs containing the full phrase)
         matches = matches.cache()
         df_p = matches.count()
         if df_p == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = math.log(1.0 + (n - df_p + 0.5) / (df_p + 0.5))
         return matches.select(
             "doc_id",
@@ -2759,10 +2873,10 @@ class InvertedIndex:
             )
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         dfs = self.term_df(sorted(terms), lang)
         if any(t not in dfs for t in terms):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         # sum of per-term idfs, accumulated in PHRASE order (the oracle
         # writes the same left-associated chain — bit-identical)
         idf_sum = 0.0
@@ -2819,18 +2933,18 @@ class InvertedIndex:
         full-phrase matches leave the kernels)."""
         terms = self._analyze_seq(phrase_text)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         fixed, prefix = terms[:-1], terms[-1]
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         mats = []
         for e in self.expand_prefix(prefix, lang, max_expansions):
             m = self._phrase_matches(fixed + [e], lang)
             if m is not None:
                 mats.append(m)
         if not mats:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         allm = mats[0]
         for m in mats[1:]:
             allm = allm.unionByName(m)
@@ -2841,7 +2955,7 @@ class InvertedIndex:
         )
         df_p = agg.count()
         if df_p == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = math.log(1.0 + (n - df_p + 0.5) / (df_p + 0.5))
         return (
             agg.select(
@@ -2884,7 +2998,7 @@ class InvertedIndex:
             .collect()
         )
         if not rows:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         win = self.spark.createDataFrame(
             [(int(r["doc_id"]), float(r["score"])) for r in rows],
             "doc_id long, score double",
@@ -2947,13 +3061,13 @@ class InvertedIndex:
         seq = self._analyze_seq(query_text)
         terms = sorted(set(seq))
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         dfs = self.term_df(terms, lang)
         if any(t not in dfs for t in terms):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = {
             t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
             for t, df in dfs.items()
@@ -2995,7 +3109,7 @@ class InvertedIndex:
         seq = self._analyze_seq(query_text)
         n_terms = len(seq) if ordered else len(set(seq))
         if n_terms == 0:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         window = int(max_gaps) + n_terms - 1
         return self.near_topk(query_text, window, k, lang, in_order=ordered)
 
@@ -3030,17 +3144,17 @@ class InvertedIndex:
             )
         srcs = [tuple(dict.fromkeys(s)) for s in sources if s]
         if not srcs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         all_terms = sorted({t for s in srcs for t in s})
         dfs = self.term_df(all_terms, lang)
         # prune alternatives absent from the corpus; an all_of clause
         # with NO surviving alternative can never match
         srcs = [tuple(t for t in s if t in dfs) for s in srcs]
         if any(not s for s in srcs):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         terms = sorted({t for s in srcs for t in s})
         idf = {
             t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
@@ -3099,15 +3213,15 @@ class InvertedIndex:
         srcs = [tuple(dict.fromkeys(s)) for s in sources if s]
         fterms = sorted({t for t in filter_terms})
         if not srcs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         all_terms = sorted({t for s in srcs for t in s} | set(fterms))
         dfs = self.term_df(all_terms, lang)
         srcs = [tuple(t for t in s if t in dfs) for s in srcs]
         if any(not s for s in srcs):
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         live_f = tuple(t for t in fterms if t in dfs)
         terms = sorted({t for s in srcs for t in s})
         idf = {
@@ -3212,7 +3326,7 @@ class InvertedIndex:
         }
         empty = "doc_id long, term string, tf long, idf double, contrib double, score double"
         if not idf:
-            return self.spark.createDataFrame([], empty)
+            return local_frame(self.spark, empty)
         idf_df = F.broadcast(
             self.spark.createDataFrame(list(idf.items()), "term string, idf double")
         )
@@ -3252,7 +3366,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         dfs = self.term_df(terms, lang) if terms else {}
         if not dfs:
-            return self.spark.createDataFrame([], "doc_id long")
+            return local_frame(self.spark, "doc_id long")
         return self._live(
             self._blocks(sorted(dfs), lang)
             .select("term", "first_doc", "gaps", "tfs", "dls")
@@ -3336,7 +3450,7 @@ class InvertedIndex:
         whose ``[first_doc, last_doc]`` span covers a requested id BEFORE
         any decode — decode volume is bounded by the pruned segments,
         independent of corpus size. ``df`` comes from the dictionary
-        (driver cache / pruned read), shipped back as one broadcast join;
+        (a pyarrow point lookup), shipped back as one broadcast join;
         the distinct-term collect is bounded by the requested docs'
         vocabulary.
         """
@@ -3385,7 +3499,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
         return scored.select("doc_id", F.round("score", 6).alias("score"))
 
@@ -3591,7 +3705,7 @@ class InvertedIndex:
         field = h["field"]
         self._load_tombs()
         n_tombs = (
-            len(self._tomb_bcast.value) if self._tomb_bcast is not None
+            len(self._tomb_arr) if self._tomb_arr is not None
             else (self._tomb_df.count() if self._tomb_df is not None else 0)
         )
         need = int(k) + int(n_tombs)
@@ -3655,7 +3769,7 @@ class InvertedIndex:
         cv, cd = int(cursor[0]), int(cursor[1])
         self._load_tombs()
         n_tombs = (
-            len(self._tomb_bcast.value) if self._tomb_bcast is not None
+            len(self._tomb_arr) if self._tomb_arr is not None
             else (self._tomb_df.count() if self._tomb_df is not None else 0)
         )
         need = int(k) + int(n_tombs)
@@ -4085,8 +4199,8 @@ class InvertedIndex:
                 "significant_terms backgrounds against the as-of-latest "
                 "dictionary — time-travel aggregation is not supported"
             )
-        empty = self.spark.createDataFrame(
-            [], "term string, fg_df long, bg_df long, score double"
+        empty = local_frame(
+            self.spark, "term string, fg_df long, bg_df long, score double"
         )
         terms = self._analyze(query_text)
         if not terms:
@@ -4331,7 +4445,7 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         decoded = self._decoded(self._blocks(sorted(idf), lang))
         scored = (
             decoded.join(self._idf_df(idf), "term")
@@ -4383,7 +4497,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         cfs = self.term_cf(terms, lang) if terms else {}
         if not cfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         om, lm, p = jm_constants(cfs, self._sum_dl(lang), lam)
         p_df = F.broadcast(
             self.spark.createDataFrame(
@@ -4429,7 +4543,7 @@ class InvertedIndex:
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
         if not dfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         idf = inl2_idf(n, dfs)
         decoded = self._decoded(self._blocks(sorted(idf), lang))
         tfn = self._h2_tfn(avgdl)
@@ -4467,7 +4581,7 @@ class InvertedIndex:
         n, avgdl = self.corpus_stats(lang)
         cfs = self.term_cf(terms, lang) if terms and n else {}
         if not cfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         lam = {t: float(cf) / n for t, cf in cfs.items()}
         lam_df = F.broadcast(
             self.spark.createDataFrame(
@@ -4505,7 +4619,7 @@ class InvertedIndex:
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
         if not dfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         lw = ll_lambda(n, dfs)
         lw_df = F.broadcast(
             self.spark.createDataFrame(
@@ -4538,7 +4652,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         cfs = self.term_cf(terms, lang) if terms else {}
         if not cfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         t1 = float(self._sum_dl(lang)) + 1.0
         cfp1 = {t: float(cf) + 1.0 for t, cf in cfs.items()}
         c_df = F.broadcast(
@@ -4580,7 +4694,7 @@ class InvertedIndex:
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
         if not dfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         full = [t for t, df in dfs.items() if df >= n]
         if full:
             raise ValueError(
@@ -4624,7 +4738,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         cfs = self.term_cf(terms, lang) if terms else {}
         if not cfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         t1 = float(self._sum_dl(lang)) + 1.0
         cfp1 = {t: float(cf) + 1.0 for t, cf in cfs.items()}
         c_df = F.broadcast(
@@ -4673,7 +4787,7 @@ class InvertedIndex:
         integers, no quantization. Decode plan unchanged."""
         terms = self._analyze(query_text)
         if not terms:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         live = sorted(set(terms))
         decoded = self._decoded(self._blocks(live, lang))
         return (
@@ -4731,7 +4845,7 @@ class InvertedIndex:
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
         if not dfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         return self._ax_topk(f2exp_idf(n, dfs), avgdl, k, lang)
 
     def axiomatic_f2log_topk(
@@ -4748,7 +4862,7 @@ class InvertedIndex:
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
         if not dfs:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         return self._ax_topk(f2log_idf(n, dfs), avgdl, k, lang)
 
     def synonym_query_topk(
@@ -4782,10 +4896,10 @@ class InvertedIndex:
                     )
                 members[toks[0]] = gid
         if not members:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         n, avgdl = self.corpus_stats(lang)
         if not n:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         terms = sorted(members)
         dfs = self.term_df(terms, lang)
         gdf: dict[int, int] = {}
@@ -4793,7 +4907,7 @@ class InvertedIndex:
             gid = members[t]
             gdf[gid] = max(gdf.get(gid, 0), df)
         if not gdf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         gidf = {
             gid: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
             for gid, df in gdf.items()
@@ -5020,7 +5134,7 @@ class InvertedIndex:
 
         toks = _doc_terms_of(doc_id)
         if not toks:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         tf_of: dict[str, int] = {}
         for t in toks:
             tf_of[t] = tf_of.get(t, 0) + 1
@@ -5028,7 +5142,7 @@ class InvertedIndex:
             for t in set(_doc_terms_of(unlike_doc_id)):
                 tf_of.pop(t, None)
             if not tf_of:
-                return self.spark.createDataFrame([], RESULT_SCHEMA)
+                return local_frame(self.spark, RESULT_SCHEMA)
         idf = self.term_idf(sorted(tf_of), lang)
         weights = {
             t: math.floor(tf_of[t] * w * 1e6 + 0.5) / 1e6
@@ -5037,7 +5151,7 @@ class InvertedIndex:
         chosen = sorted(weights.items(), key=lambda kv: (-kv[1], kv[0]))
         sel = sorted(t for t, _w in chosen[:max_terms])
         if not sel:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         _, avgdl = self.corpus_stats(lang)
         sel_idf = {t: idf[t] for t in sel}
         scored = self._score(
@@ -5081,7 +5195,7 @@ class InvertedIndex:
                     agg[t] = agg.get(t, 0) + df
             df_in = agg.get(q, 0)
             if mode == "missing" and df_in > 0:
-                return self.spark.createDataFrame([], out_schema)
+                return local_frame(self.spark, out_schema)
             rows = []
             for t, df in agg.items():
                 if mode == "popular" and df <= df_in:
@@ -5102,7 +5216,7 @@ class InvertedIndex:
             out = out.filter(F.col("df") > int(df_in))
         elif mode == "missing":
             if self.term_df([q], lang).get(q, 0) > 0:
-                return self.spark.createDataFrame([], out_schema)
+                return local_frame(self.spark, out_schema)
         return (
             out.select("term", "df", "dist")
             .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
@@ -5338,7 +5452,7 @@ class InvertedIndex:
             self.expand_fuzzy(t, max_edits, lang, per_term) for t in toks
         ]
         if any(not c for c in cands):
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, out_schema)
         # distinct adjacent-position candidate pairs — Σᵢ ≤ per_term²
         # rows, independent of the phrase cross-product size
         need_rows = sorted(
@@ -5438,11 +5552,16 @@ class InvertedIndex:
             for t, df in dfs.items()
         }
         if not idf:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         if mode == "auto":
+            n_postings = sum(dfs.values())
+            if n_postings < self.INPROC_MAX_POSTINGS:
+                self._load_tombs()
+                if self._tomb_df is None:
+                    return self._inproc_topk(idf, avgdl, k, lang)
             mode = (
                 "single_pass"
-                if sum(dfs.values()) < self.PRUNE_MIN_POSTINGS
+                if n_postings < self.PRUNE_MIN_POSTINGS
                 else "pruned"
             )
         if mode == "single_pass":
@@ -5467,6 +5586,33 @@ class InvertedIndex:
             scored = self._score(blocks, idf, avgdl)
             return self._finish(scored, k)
         return self._pruned_topk(blocks, idf, avgdl, k)
+
+    def _inproc_topk(
+        self, idf: dict[str, float], avgdl: float, k: int, lang: str | None
+    ) -> DataFrame:
+        """Top-k on the driver, no Spark job: pyarrow reads the matched
+        posting blocks, the batch kernel's :func:`_score_postings` scores
+        them, and the ranked rows come back as a local DataFrame (already
+        ordered: an orderBy on top would cost three jobs)."""
+        import pyarrow as pa
+
+        terms = sorted(idf)
+        blocks = self._read_blocks(
+            terms, lang, ["term", "first_doc", "gaps", "tfs", "dls"]
+        )
+        top = None
+        if blocks.num_rows:
+            top = _score_postings(
+                _decode_frame(blocks.to_pandas()),
+                {t: i for i, t in enumerate(terms)},
+                np.array([[idf[t]] for t in terms], dtype=np.float64),
+                np.zeros(1, dtype=np.int64), avgdl, k, self._tomb_arr,
+            )
+        if top is None:
+            return local_frame(self.spark, RESULT_SCHEMA)
+        return local_frame(self.spark, RESULT_SCHEMA, pa.Table.from_pandas(
+            top.head(k)[["doc_id", "score"]], preserve_index=False
+        ))
 
     def bm25_topk_batch(
         self,
@@ -5494,8 +5640,8 @@ class InvertedIndex:
         all_terms = sorted({t for q in queries.values() for t in self._analyze(q)})
         idf = self.term_idf(all_terms, lang) if all_terms and n else {}
         if not idf:
-            return self.spark.createDataFrame(
-                [], "query_id long, rank int, doc_id long, score double"
+            return local_frame(
+                self.spark, "query_id long, rank int, doc_id long, score double"
             )
         return self._batch_kernel_topk(queries, idf, avgdl, k, lang)
 
@@ -5596,7 +5742,7 @@ class InvertedIndex:
             .agg(F.sum("tub").alias("seg_ub"))
         ).collect()
         if not seg_rows:
-            return self.spark.createDataFrame([], RESULT_SCHEMA)
+            return local_frame(self.spark, RESULT_SCHEMA)
         seg_rows.sort(key=lambda r: -r["seg_ub"])
         n_seed = max(2, k // 4)
         seed = [r["segment"] for r in seg_rows[:n_seed]]
@@ -5635,7 +5781,7 @@ def fielded_indexed_topk(
     single 6dp rounding, preserving parity with the scan oracles.
     """
     some_idx = next(iter(field_indexes.values()))
-    empty = some_idx.spark.createDataFrame([], RESULT_SCHEMA)
+    empty = local_frame(some_idx.spark, RESULT_SCHEMA)
     if not field_weights:
         return empty
     parts = []
@@ -5702,7 +5848,7 @@ def combined_fields_indexed_topk(
     """
     some = next(iter(field_indexes.values()))
     spark = some.spark
-    empty = spark.createDataFrame([], RESULT_SCHEMA)
+    empty = local_frame(spark, RESULT_SCHEMA)
     fields = sorted(field_weights)
     if not fields:
         return empty
@@ -5849,7 +5995,7 @@ def sharded_bm25_topk(
         for t, df in dfs.items()
     }
     if not idf:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_frame(spark, RESULT_SCHEMA)
     parts = [
         s._score(s._blocks(sorted(idf), lang), idf, avgdl) for s in shards
     ]
@@ -5935,7 +6081,7 @@ def routed_bm25_topk(
         for t, df in dfs.items()
     }
     if not idf:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_frame(spark, RESULT_SCHEMA)
     scored = owner._score(owner._blocks(sorted(idf), lang), idf, avgdl)
     keep = owner.doc_values([routing_field]).filter(
         F.col(routing_field) == routing

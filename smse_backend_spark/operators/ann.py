@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smse_backend_spark.session import ensure_pyfiles
+from smse_backend_spark.session import ensure_pyfiles, local_frame
 
 
 def _topk_kernel(q_mat: np.ndarray, q_ids: np.ndarray, k: int):
@@ -1181,7 +1181,7 @@ def mmr_topk(
     spark = emb.sparkSession
     qrow = emb.filter(F.col("vec_id") == int(query_id)).select("embedding").first()
     if qrow is None:
-        return spark.createDataFrame([], "rank long, vec_id long, score double")
+        return local_frame(spark, "rank long, vec_id long, score double")
     qv = list(qrow["embedding"])
     cands = brute_force_topk(
         emb.filter(F.col("vec_id") != int(query_id)),
@@ -1191,7 +1191,7 @@ def mmr_topk(
     s = {int(r["vec_id"]): float(r["score"]) for r in cands}
     ids = sorted(s)
     if not ids:
-        return spark.createDataFrame([], "rank long, vec_id long, score double")
+        return local_frame(spark, "rank long, vec_id long, score double")
     vec_rows = (
         emb.filter(F.col("vec_id").isin(ids))
         .select("vec_id", "embedding")

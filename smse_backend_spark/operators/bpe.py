@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from smse_backend_spark.session import local_frame
+
 SENTINEL = "\x01"
 
 
@@ -80,8 +82,9 @@ def bpe_merge_step(docs: DataFrame, top_pairs: int = 5) -> DataFrame:
         F.desc("cnt"), F.asc("a"), F.asc("b")
     ).limit(1).collect()
     if not top:
-        return docs.sparkSession.createDataFrame(
-            [], "phase string, left string, right string, cnt long, rank long"
+        return local_frame(
+            docs.sparkSession,
+            "phase string, left string, right string, cnt long, rank long",
         )
     ba, bb = top[0]["a"], top[0]["b"]
     merged = ba + bb

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from smse_backend_spark.session import local_frame
+
 TWO60 = 1 << 60
 
 
@@ -219,9 +221,9 @@ def mixture_plan(docs: DataFrame, targets: dict[str, float]) -> DataFrame:
         F.min(F.col("n_tokens").cast("double") / F.col("w"))
     ).first()[0]
     if c is None:
-        return spark.createDataFrame(
-            [], "source string, n_docs long, n_tokens long, rate double, "
-                "plan_tokens long"
+        return local_frame(
+            spark, "source string, n_docs long, n_tokens long, rate double, "
+                   "plan_tokens long"
         )
     rate_raw = F.least(
         F.lit(1.0),

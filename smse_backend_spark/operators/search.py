@@ -35,6 +35,7 @@ from smse_backend_spark.functions.tokenizer import (
     tokenize_duckdb_sql,
     tokenize_py,
 )
+from smse_backend_spark.session import local_frame
 
 
 def query_terms(query_text: str) -> list[str]:
@@ -2981,9 +2982,7 @@ def snippets_for_hits(
     """
     spark = corpus.sparkSession
     if not topk_rows or not ordered_terms:
-        return spark.createDataFrame(
-            [], "doc_id long, score double, snippet string"
-        )
+        return local_frame(spark, "doc_id long, score double, snippet string")
     if lang is not None:
         corpus = corpus.filter(F.col("lang") == lang)
     ids = [int(r["doc_id"]) for r in topk_rows]
@@ -3038,9 +3037,7 @@ def highlight_snippets(
     dfs come from the dictionary.
     """
     terms = query_terms(query_text)
-    empty = corpus.sparkSession.createDataFrame(
-        [], "doc_id long, score double, snippet string"
-    )
+    empty = local_frame(corpus.sparkSession, "doc_id long, score double, snippet string")
     if not terms:
         return empty
     scan = corpus.filter(F.col("lang") == lang) if lang is not None else corpus

@@ -11,7 +11,7 @@ import os
 import zipfile
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 _PYFILES_SENT: set[int] = set()
 
@@ -158,3 +158,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, schema, table=None) -> DataFrame:
+    """A driver-local DataFrame over an Arrow ``table`` (empty when None).
+
+    Built from Arrow, the frame is a local relation: collecting it runs no
+    Spark job. ``createDataFrame([], schema)`` (and an empty pandas frame)
+    goes through a parallelized RDD instead and costs one job. ``schema``
+    is a ``StructType`` or a DDL string; the frame keeps it exactly.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    if table is None:
+        table = to_arrow_schema(schema).empty_table()
+    return spark.createDataFrame(table, schema)

@@ -51,7 +51,7 @@ def test_postings_scan_pushes_term_filters(index):
     """The postings parquet scan must receive the term/bucket predicates
     (partition + row-group pruning at 100 TB; a full postings scan per
     query would be the single worst regression possible)."""
-    plan = plan_of(index.bm25_topk(Q, 10))
+    plan = plan_of(index.bm25_topk(Q, 10, mode="single_pass"))
     assert "PushedFilters" in plan
     assert "term_bucket" in plan, "bucket predicate lost from the scan"
     # the In(term, ...) filter itself must reach the scan too
@@ -66,11 +66,12 @@ def test_index_topk_ends_in_take_ordered(index):
 
 
 def test_single_pass_kernel_has_no_join(index):
-    """The default top-k path is the single-pass batch kernel: idf is
+    """The Spark top-k path for mid-size queries is the single-pass batch
+    kernel (``auto`` answers small ones in-process, with no plan): idf is
     computed inside the Arrow kernel, so the plan has NO join node at all
     — one postings scan, one segment repartition, the kernel, the top-k.
     A join (re)appearing here means the kernel path was lost."""
-    plan = plan_of(index.bm25_topk(Q, 10))
+    plan = plan_of(index.bm25_topk(Q, 10, mode="single_pass"))
     assert "SortMergeJoin" not in plan
     assert "hashpartitioning(segment#" in plan, "segment repartition lost"
 
@@ -87,7 +88,7 @@ def test_score_path_idf_join_is_broadcast(index):
 def test_index_path_python_is_arrow_only(index):
     """The only Python crossing on the query path is the Arrow-vectorized
     block decode — a row-at-a-time BatchEvalPython stage is forbidden."""
-    plan = plan_of(index.bm25_topk(Q, 10))
+    plan = plan_of(index.bm25_topk(Q, 10, mode="single_pass"))
     assert "BatchEvalPython" not in plan
 
 
