@@ -1342,7 +1342,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             "smse_backend_spark.operators.lmsim", fromlist=["x"]
         ).lm_dirichlet_scan(load_corpus(spark, sf), FLAGSHIP_QUERY, 10),
         "lm_dirichlet_indexed": lambda spark, sf: _indexed(spark, sf)
-        .lm_dirichlet_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "lm", 10),
         "bm25_batch": lambda spark, sf: _indexed(spark, sf)
         .bm25_topk_batch(BATCH_QUERIES, 10)
         .withColumn("rank", F.col("rank").cast("long")),
@@ -1397,44 +1397,44 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # Lucene ClassicSimilarity (TF-IDF): sqrt-tf, squared idf,
         # 1/sqrt(dl) norm — the third similarity on the shared decode
         "classic_tfidf": lambda spark, sf: _indexed(spark, sf)
-        .classic_tfidf_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "tfidf", 10),
         # Lucene LMJelinekMercerSimilarity: λ-interpolated query
         # likelihood (λ=0.1) — fourth similarity on the shared decode
         "lm_jelinek_mercer": lambda spark, sf: _indexed(spark, sf)
-        .lm_jelinek_mercer_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "jm", 10),
         # Lucene DFRSimilarity(In, L, H2) == classic InL2 DFR model;
         # lang-restricted to exercise per-lang df/avgdl stats
         "dfr_inl2": lambda spark, sf: _indexed(spark, sf)
-        .dfr_inl2_topk("batch stream spark window", 10, lang="en"),
+        .similarity_topk("batch stream spark window", "inl2", 10, lang="en"),
         # Terrier PL2 (DFR Poisson/Laplace/H2 — pre-8.0 Lucene BasicModelP)
         "dfr_pl2": lambda spark, sf: _indexed(spark, sf)
-        .dfr_pl2_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "pl2", 10),
         # Lucene IBSimilarity(LL, DF, H2): information-based log-logistic
         "ib_ll": lambda spark, sf: _indexed(spark, sf)
-        .ib_ll_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "ib", 10),
         # Lucene IBSimilarity(SPL, DF, H2): smoothed power-law sibling —
         # the power written exp(q·ln λ) identically on both engines
         "ib_spl": lambda spark, sf: _indexed(spark, sf)
-        .ib_spl_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "ib_spl", 10),
         # Lucene DFISimilarity(ChiSquared): divergence from independence —
         # a term scores only where tf exceeds its expectation
         "dfi_chi2": lambda spark, sf: _indexed(spark, sf)
-        .dfi_chi2_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "dfi", 10),
         # the remaining Lucene independence measures (same gate)
         "dfi_saturated": lambda spark, sf: _indexed(spark, sf)
-        .dfi_saturated_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "dfi_saturated", 10),
         "dfi_standardized": lambda spark, sf: _indexed(spark, sf)
-        .dfi_standardized_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "dfi_standardized", 10),
         # Lucene BooleanSimilarity: score = matched-term count
         "boolean_sim": lambda spark, sf: _indexed(spark, sf)
-        .boolean_sim_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "boolean", 10),
         # Lucene AxiomaticF2EXP (Fang & Zhai 2005): ((N+1)/df)^0.35 idf
         # over the F2 normalized tf — the axiomatic retrieval family
         "axiomatic_f2exp": lambda spark, sf: _indexed(spark, sf)
-        .axiomatic_f2exp_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "f2exp", 10),
         # Lucene AxiomaticF2LOG: log-idf sibling, same F2 tf norm
         "axiomatic_f2log": lambda spark, sf: _indexed(spark, sf)
-        .axiomatic_f2log_topk(FLAGSHIP_QUERY, 10),
+        .similarity_topk(FLAGSHIP_QUERY, "f2log", 10),
         # Lucene WildcardQuery: * and ? compiled onto the regex path
         "bm25_wildcard": lambda spark, sf: _indexed(spark, sf)
         .bm25_topk_wildcard("m?rg*", 10),

@@ -108,32 +108,15 @@ def cmd_query(args) -> None:
             args.text, args.boosting.split(","), args.negative_boost,
             args.k, args.lang,
         )
-    elif args.similarity == "lm":
-        out = idx.lm_dirichlet_topk(args.text, args.k, args.lang, mu=args.mu)
-    elif args.similarity == "jm":
-        out = idx.lm_jelinek_mercer_topk(args.text, args.k, args.lang)
-    elif args.similarity == "inl2":
-        out = idx.dfr_inl2_topk(args.text, args.k, args.lang)
-    elif args.similarity == "pl2":
-        out = idx.dfr_pl2_topk(args.text, args.k, args.lang)
-    elif args.similarity == "ib":
-        out = idx.ib_ll_topk(args.text, args.k, args.lang)
-    elif args.similarity == "ib_spl":
-        out = idx.ib_spl_topk(args.text, args.k, args.lang)
-    elif args.similarity == "dfi":
-        out = idx.dfi_chi2_topk(args.text, args.k, args.lang)
-    elif args.similarity == "dfi_saturated":
-        out = idx.dfi_saturated_topk(args.text, args.k, args.lang)
-    elif args.similarity == "dfi_standardized":
-        out = idx.dfi_standardized_topk(args.text, args.k, args.lang)
-    elif args.similarity == "boolean":
-        out = idx.boolean_sim_topk(args.text, args.k, args.lang)
-    elif args.similarity == "tfidf":
-        out = idx.classic_tfidf_topk(args.text, args.k, args.lang)
-    elif args.similarity == "f2exp":
-        out = idx.axiomatic_f2exp_topk(args.text, args.k, args.lang)
-    elif args.similarity == "f2log":
-        out = idx.axiomatic_f2log_topk(args.text, args.k, args.lang)
+    elif args.similarity != "bm25":
+        from smse_backend_spark.operators.similarities import (
+            SIMILARITIES,
+            lm_dirichlet,
+        )
+
+        sim = (lm_dirichlet(args.mu) if args.similarity == "lm"
+               else SIMILARITIES[args.similarity])
+        out = idx.similarity_topk(args.text, sim, args.k, args.lang)
     else:
         out = idx.bm25_topk(args.text, args.k, args.lang, mode=args.mode)
     rows = out.collect()
@@ -614,16 +597,14 @@ def main(argv: list[str] | None = None) -> None:
                    help="comma-separated negative terms: matching docs are "
                         "demoted by --negative-boost, not excluded")
     q.add_argument("--negative-boost", type=float, default=0.5)
-    q.add_argument("--similarity",
-                   choices=("bm25", "lm", "jm", "inl2", "pl2", "ib",
-                            "ib_spl", "dfi", "dfi_saturated",
-                            "dfi_standardized", "boolean", "tfidf",
-                            "f2exp", "f2log"),
+    from smse_backend_spark.operators.similarities import SIMILARITIES
+
+    q.add_argument("--similarity", choices=tuple(SIMILARITIES),
                    default="bm25",
                    help="pluggable ranking function (the Lucene similarity "
-                        "family: BM25, Dirichlet LM, Jelinek-Mercer, DFR "
-                        "InL2/PL2, IB log-logistic, DFI chi2, boolean, "
-                        "classic TF-IDF, axiomatic F2EXP/F2LOG)")
+                        "family: " + ", ".join(
+                            f"{name} = {sim.lucene}"
+                            for name, sim in SIMILARITIES.items()) + ")")
     q.add_argument("--mu", type=float, default=2000.0,
                    help="Dirichlet smoothing parameter (with --similarity lm)")
     q.add_argument("--min-match", type=int,

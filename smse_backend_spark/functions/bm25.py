@@ -14,10 +14,17 @@ total order; rank-identity vs any oracle requires the doc_id tie-break.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from smse_backend_spark import B, K1
+
+
+def bm25_idf(n: float, df: int) -> float:
+    """idf(t) on the driver: the one Python spelling of the formula."""
+    return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
 
 def idf_col(df_count: Column, n_docs: Column | float) -> Column:

@@ -250,46 +250,6 @@ def stemmed_term_counts_map_in_pandas(
         yield out[cols]
 
 
-def term_counts_with_docs_map_in_pandas(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Like :func:`term_counts_map_in_pandas` plus one sentinel row per doc
-    (``term=''``, ``tf=0``) carrying the doc's length/lang.
-
-    The sentinel rows let the index build derive docstats (incl. zero-token
-    docs) from the SAME staged tokenize output — the corpus is scanned and
-    tokenized exactly once per batch. '' can never collide with a real term
-    (the tokenizer drops empty tokens).
-    """
-    for pdf in batches:
-        toks = _fold_series(pdf["content"].fillna("")).str.findall(_PY_TOKEN)
-        dl = toks.str.len().astype("int64")
-        lang = pdf["lang"].to_numpy() if "lang" in pdf.columns else ""
-        docs = pd.DataFrame(
-            {"doc_id": pdf["doc_id"].to_numpy(), "term": "", "tf": 0,
-             "doc_len": dl.to_numpy(), "lang": lang}
-        )
-        frame = pd.DataFrame(
-            {"doc_id": pdf["doc_id"].values, "term": toks.values,
-             "doc_len": dl.values,
-             "lang": pdf["lang"].values if "lang" in pdf.columns else ""}
-        ).explode("term", ignore_index=True).dropna(subset=["term"])
-        if frame.empty:
-            yield docs
-            continue
-        frame["term"] = frame["term"].str.lower()
-        out = (
-            frame.groupby(["doc_id", "term", "doc_len", "lang"], sort=False)
-            .size()
-            .rename("tf")
-            .reset_index()
-        )
-        yield pd.concat(
-            [docs, out[["doc_id", "term", "tf", "doc_len", "lang"]]],
-            ignore_index=True,
-        )
-
-
 TERM_COUNTS_SCHEMA = "doc_id long, term string, tf long, doc_len long"
 TERM_COUNTS_LANG_SCHEMA = "doc_id long, term string, tf long, doc_len long, lang string"
 TERM_POSITIONS_LANG_SCHEMA = (
@@ -475,12 +435,9 @@ def stem_duckdb_sql(toks_expr: str) -> str:
 # Synonym analyzer (Lucene SynonymGraphFilter, contract flavor): tokens are
 # folded to their group's canonical term at INDEX time, so a group scores as
 # one term with pooled tf/df. 1:1 token mapping — doc_len is unchanged, like
-# the stemmer. Three lockstep impls, same discipline as the stemmer above.
+# the stemmer. A Column impl and its DuckDB twin, same discipline as the
+# stemmer above (the driver-side fold is a plain ``dict.get``).
 # ---------------------------------------------------------------------------
-
-def synonym_py(t: str, synonyms: dict[str, str]) -> str:
-    return synonyms.get(t, t)
-
 
 def synonym_col(toks: Column, synonyms: dict[str, str]) -> Column:
     """array<string> -> array<string>, each token folded through the

@@ -9,9 +9,6 @@ Reference semantics re-expressed:
   gating applied AFTER scoring.
 - multipart fusion: element-wise mean + most-common-modality with
   first-seen tie-break (services/embedding.py:56-94).
-- softmax / min-max normalization (services/search.py:28-74) — defined but
-  DISABLED in the reference (identity at search.py:193); provided here for
-  parity, not wired into the default path.
 
 All array math is Column-native (``zip_with``/``aggregate`` — JVM codegen,
 no Python). For 1024-dim vectors at cluster scale a Pandas-UDF + numpy
@@ -46,54 +43,3 @@ def norm_col(a: Column) -> Column:
 def cosine_col(a: Column, b: Column) -> Column:
     """Cosine similarity (== pgvector's ``1 - (a <=> b)``)."""
     return dot_col(a, b) / (norm_col(a) * norm_col(b))
-
-
-def cosine_sql(a_expr: str, b_expr: str, table_alias: str = "") -> str:
-    """DuckDB equivalent via zipped unnest (double accumulation, same math).
-
-    Caller embeds this as a correlated scalar; simpler form used in oracle
-    builders: explicit unnest+group. Provided for one-off expressions.
-    """
-    return (
-        f"(list_sum(list_transform(list_zip({a_expr}, {b_expr}),"
-        f" p -> p[1]::DOUBLE * p[2]::DOUBLE))"
-        f" / (sqrt(list_sum(list_transform({a_expr}, x -> x::DOUBLE * x::DOUBLE)))"
-        f" * sqrt(list_sum(list_transform({b_expr}, x -> x::DOUBLE * x::DOUBLE)))))"
-    )
-
-
-def fold_mean_vectors(vecs: Column, n: Column) -> Column:
-    """Element-wise mean of an already-collected ``array<array<float>>``.
-
-    Used after ``collect_list`` in an aggregation: one ``zip_with(+)`` fold
-    then divide — avoids posexplode (which would multiply the shuffled rows
-    by the vector dimension). Returns null on empty input, mirroring the
-    reference's ``(None, None)`` (services/embedding.py:70-73).
-    """
-    summed = F.aggregate(
-        vecs,
-        F.lit(None).cast("array<double>"),
-        lambda acc, v: F.when(acc.isNull(), v.cast("array<double>")).otherwise(
-            F.zip_with(acc, v, lambda x, y: x + y.cast("double"))
-        ),
-    )
-    return F.transform(summed, lambda x: x / n.cast("double"))
-
-
-def softmax_over(score: Column, part) -> Column:
-    """Numerically-stable softmax within a window partition (search.py:28-51)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*part) if not isinstance(part, Window.__class__) else part
-    mx = F.max(score).over(w)
-    e = F.exp(score - mx)
-    return e / F.sum(e).over(w)
-
-
-def min_max_over(score: Column, part) -> Column:
-    """Min-max normalize within a partition; all-equal -> 1.0 (search.py:54-74)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*part)
-    mn, mx = F.min(score).over(w), F.max(score).over(w)
-    return F.when(mx == mn, F.lit(1.0)).otherwise((score - mn) / (mx - mn))

@@ -49,10 +49,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from smse_backend_spark.functions.tokenizer import (
-    TERM_COUNTS_LANG_SCHEMA,
-    term_counts_map_in_pandas,
-)
 from smse_backend_spark.index import lineage as lin
 from smse_backend_spark.index.codec import delta_encode, encode_blocks
 
@@ -575,36 +571,19 @@ def _build_batch(
         out_schema = BLOCKS_SCHEMA_POS
         tc = part.select("doc_id", "content", "lang").mapInPandas(kernel, schema)
     else:
-        # default + stemmed paths: all-JVM tokenize+tf (term_counts_df —
-        # array_sort + group-start Column algebra; the stemmed variant
-        # stems the token array pre-sort so collisions merge for free).
-        # Row-equal to the Arrow kernels (lockstep-tested) but with no
-        # Python workers, no Arrow transfer, and no GIL in the widest
-        # stage of the build. Set SMSE_TOKENIZE_IMPL=pandas to fall back
-        # to the Arrow kernels.
-        from smse_backend_spark.functions.tokenizer import (
-            stemmed_term_counts_map_in_pandas,
-            term_counts_df,
-        )
+        # default, stemmed and synonym paths: all-JVM tokenize+tf
+        # (term_counts_df — array_sort + group-start Column algebra; the
+        # stemmed variant stems the token array pre-sort so collisions
+        # merge for free). Row-equal to the Arrow reference kernels
+        # (lockstep-tested) but with no Python workers, no Arrow transfer,
+        # and no GIL in the widest stage of the build.
+        from smse_backend_spark.functions.tokenizer import term_counts_df
 
         out_schema = BLOCKS_SCHEMA
-        # the synonym analyzer has no Arrow kernel — its fold is a pure
-        # map literal, so the JVM path is used regardless of the knob
-        if (os.environ.get("SMSE_TOKENIZE_IMPL", "column") == "pandas"
-                and analyzer != "synonym"):
-            kernel = (
-                stemmed_term_counts_map_in_pandas
-                if analyzer == "stem"
-                else term_counts_map_in_pandas
-            )
-            tc = part.select("doc_id", "content", "lang").mapInPandas(
-                kernel, TERM_COUNTS_LANG_SCHEMA
-            )
-        else:
-            tc = term_counts_df(
-                part.select("doc_id", "content", "lang"), analyzer=analyzer,
-                synonyms=synonyms,
-            )
+        tc = term_counts_df(
+            part.select("doc_id", "content", "lang"), analyzer=analyzer,
+            synonyms=synonyms,
+        )
     tc = (
         tc
         .withColumn("segment", (F.col("doc_id") / segment_size).cast("long"))

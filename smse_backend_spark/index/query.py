@@ -1,7 +1,10 @@
-"""Query-time BM25 top-k over the segment-partitioned index.
+"""Query-time top-k over the segment-partitioned index.
 
-Three exact paths answer ``bm25_topk``; all share one scoring kernel
-(:func:`_score_postings`) and one rank rule (6 dp, score desc, doc_id asc):
+Every similarity — BM25 and the Lucene family in
+``operators/similarities.py`` — is a record (per-term constants, a numpy
+per-posting contribution, a summation rule) scored by one kernel,
+:func:`_score_postings`, with one rank rule (score desc, doc_id asc).
+Three exact paths serve every record (``bm25_topk`` / ``similarity_topk``):
 
 - **in-process** (``mode="auto"`` for small queries): the driver looks the
   query terms up in the sorted dictionary with pyarrow, reads the matched
@@ -15,24 +18,32 @@ Three exact paths answer ``bm25_topk``; all share one scoring kernel
 - ``single_pass``: the same kernel inside one Spark job. Compressed blocks
   shuffle by segment, each partition scores its docs, a window keeps the
   global top-k. The big-query default.
-- ``exhaustive`` / ``pruned``: decoded rows scored with Column algebra.
-  ``exhaustive`` decodes every matching block (the correctness anchor);
-  ``pruned`` (block-max) reads only the per-block stat columns first,
-  scores the most promising segments to get a threshold θ, then decodes
-  only segments whose upper bound can still beat θ — block-max WAND at
-  segment granularity. Exact: every skipped segment has ub < θ ≤ k-th
-  score.
+- the tombstone fallback: a delete set over ``TOMB_ARRAY_CAP`` cannot ship
+  to the kernel as an array, so the blocks are decoded, deleted docs are
+  dropped with an anti-join and the live rows, partitioned by doc, go
+  through the same kernel.
+
+BM25 alone also has ``exhaustive`` / ``pruned``: decoded rows scored with
+Column algebra. ``exhaustive`` decodes every matching block (the
+correctness anchor); ``pruned`` (block-max) reads only the per-block stat
+columns first, scores the most promising segments to get a threshold θ,
+then decodes only segments whose upper bound can still beat θ — block-max
+WAND at segment granularity. Exact: every skipped segment has ub < θ ≤
+k-th score.
 
 Routing for ``mode="auto"`` is by the dictionary df summed over the query
 terms (= the postings the query decodes): below
 ``InvertedIndex.INPROC_MAX_POSTINGS`` and with the tombstone set within
-``TOMB_ARRAY_CAP`` the query runs in-process; below
-``PRUNE_MIN_POSTINGS`` on ``single_pass``; above it on ``pruned``. An
-explicit ``mode=`` and ``bm25_topk_batch`` always use the Spark kernels.
+``TOMB_ARRAY_CAP`` the query runs in-process; otherwise on the Spark
+kernel, except BM25 at ``PRUNE_MIN_POSTINGS`` and above, which runs
+``pruned``. An explicit ``mode=`` and ``bm25_topk_batch`` always use the
+Spark plans.
 
 Spark plan shape to expect at scale: partition pruning on (lang,
-term_bucket, batch), predicate pushdown on term, ArrowEvalPython only for
-block decode, and ``TakeOrderedAndProject`` on top.
+term_bucket, batch), predicate pushdown on term, Python only in the
+per-partition Arrow kernels (block decode, scoring) and never a per-row
+UDF; the kernel ends in a per-query window rank, the Column-algebra BM25
+plans in ``TakeOrderedAndProject``.
 
 Replaces the reference's per-query exact pgvector scan
 (smse_backend/services/search.py:97-110, which has no ANN index) with a
@@ -53,9 +64,16 @@ from pyspark.sql import types as T
 
 from smse_backend_spark import B, DEFAULT_TOP_K, K1
 from smse_backend_spark.index import lineage as lin
+from smse_backend_spark.functions.bm25 import bm25_idf
 from smse_backend_spark.index.codec import decode_blocks, delta_decode
 from smse_backend_spark.index.deletes import live_mask
 from smse_backend_spark.operators.search import query_terms
+from smse_backend_spark.operators.similarities import (
+    BM25,
+    SIMILARITIES,
+    CorpusStats,
+    Similarity,
+)
 from smse_backend_spark.session import local_frame
 
 RESULT_SCHEMA = T.StructType(
@@ -207,19 +225,38 @@ def _damerau_within(a: str, b: str, d: int) -> bool:
 SCORE_PAD = 32
 
 
+def _query_hits(
+    t_idx: np.ndarray, codes: np.ndarray, has: np.ndarray, n_docs: int
+) -> np.ndarray:
+    """(query x doc) bool: the doc (``codes``: each posting's doc number)
+    has a posting of one of the query's terms (``has``: term x query)."""
+    # decoded blocks are runs of one term, so the stable sort is cheap
+    order = np.argsort(t_idx, kind="stable")
+    bounds = np.searchsorted(t_idx, np.arange(has.shape[0] + 1), sorter=order)
+    docs_of = codes[order]
+    hits = np.zeros((has.shape[1], n_docs), dtype=bool)
+    for t in np.flatnonzero(has.any(axis=1)):
+        docs = docs_of[bounds[t]:bounds[t + 1]]
+        hits[np.ix_(np.flatnonzero(has[t]), docs)] = True
+    return hits
+
+
 def _score_postings(
     pdf: pd.DataFrame, term_ix: dict[str, int], w_mat: np.ndarray,
-    qids: np.ndarray, avgdl: float, k: int, tomb: np.ndarray | None = None,
+    has: np.ndarray, qids: np.ndarray, st: CorpusStats, k: int,
+    tomb: np.ndarray | None = None, sim: Similarity = BM25,
 ) -> pd.DataFrame | None:
-    """BM25-score decoded postings (term, doc_id, tf, dl) for every query
-    at once -> each query's top-(k+pad) rows (query_id, doc_id, score),
-    scores rounded to 6 dp, ordered (score desc, doc_id asc); None when no
-    doc scores. ``w_mat`` is the (term x query) idf weight matrix.
+    """Score decoded postings (term, doc_id, tf, dl) with the similarity
+    record ``sim`` for every query at once -> each query's top-(k+pad)
+    rows (query_id, doc_id, score), ordered (score desc, doc_id asc); None
+    when no doc ranks. ``w_mat`` is the (term x query) matrix of the
+    record's per-term constants (0 where a query lacks the term), ``has``
+    the (term x query) bool matrix of which query has which term.
 
-    The one scoring code path: the Spark batch kernel runs it per
-    partition and the in-process path runs it on the driver. A doc's
-    postings must all be in ``pdf`` (segments are disjoint doc-id ranges,
-    so a segment-partitioned shuffle guarantees it).
+    The one scoring code path: the Spark kernel runs it per partition,
+    the in-process path on the driver. A doc's postings must all be in
+    ``pdf`` (segments are disjoint doc-id ranges, so a segment-partitioned
+    shuffle guarantees it).
     """
     if tomb is not None:
         # soft-delete filter: drop tombstoned docs before scoring (a
@@ -227,27 +264,38 @@ def _score_postings(
         pdf = pdf[live_mask(tomb, pdf["doc_id"].to_numpy(np.int64))]
         if pdf.empty:
             return None
-    tf = pdf["tf"].to_numpy(np.float64)
-    dl = pdf["dl"].to_numpy(np.float64)
-    tfn = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+    tf = pdf["tf"].to_numpy(np.float64)[:, None]
+    dl = pdf["dl"].to_numpy(np.float64)[:, None]
     t_idx = pdf["term"].map(term_ix).to_numpy(np.int64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        contrib = sim.contrib(tf, dl, w_mat[t_idx], st)
+    if sim.quantized:
+        contrib = np.floor(contrib * 1e6 + 0.5).astype(np.int64)
     # dense (postings x queries) contributions, grouped by doc: one
     # C-path groupby-sum instead of scalar scatter-adds
-    contrib = pd.DataFrame(tfn[:, None] * w_mat[t_idx])
+    contrib = pd.DataFrame(contrib)
     contrib["__doc"] = pdf["doc_id"].to_numpy()
-    scores = contrib.groupby("__doc", sort=False).sum()
-    doc_ids = scores.index.to_numpy(np.int64)
+    grouped = contrib.groupby("__doc", sort=False)
+    sums = grouped.sum()
+    doc_ids = sums.index.to_numpy(np.int64)
+    # a doc ranks for a query when it has a posting of one of the query's
+    # terms, whatever the sign of its score (PL2 and DFI can score <= 0);
+    # when every query has every term here, that is every doc
+    hits = None if has.all() else _query_hits(
+        t_idx, grouped.ngroup().to_numpy(), has, doc_ids.size
+    )
     # transpose to contiguous per-query rows (the docs x queries layout
     # strides 8*n_queries bytes per element down a column — measured
     # ~16% of batch wall-clock at 64 queries x 1.5 M docs) and round
-    # ONCE, vectorized, instead of per-query on the nonzero subset
-    mat = np.round(np.ascontiguousarray(scores.to_numpy().T), 6)
+    # ONCE, vectorized, instead of per-query on the matched subset
+    raw = np.ascontiguousarray(sums.to_numpy().T)
+    mat = raw / 1e6 if sim.quantized else np.round(raw, 6)
 
     kk = min(k + SCORE_PAD, mat.shape[1])
     out_q, out_d, out_s = [], [], []
     for j in range(mat.shape[0]):
         col = mat[j]
-        nz = np.flatnonzero(col > 0.0)
+        nz = np.arange(col.size) if hits is None else np.flatnonzero(hits[j])
         if nz.size == 0:
             continue
         # deterministic candidate cut: partition on the ROUNDED scores
@@ -279,11 +327,13 @@ def _score_postings(
 
 
 def _make_batch_scorer(
-    term_ix: dict[str, int], w_mat: np.ndarray, qids: np.ndarray, avgdl: float,
-    k: int, tomb_b=None,
+    term_ix: dict[str, int], w_mat: np.ndarray, has: np.ndarray,
+    qids: np.ndarray, st: CorpusStats, k: int, tomb_b=None,
+    sim: Similarity = BM25, decode: bool = True,
 ):
-    """Per-partition batch kernel: decode posting blocks AND score all
-    queries in one pass (no decoded-row materialization between stages).
+    """Per-partition kernel: decode posting blocks (``decode``; else the
+    rows are decoded already) AND score all queries in one pass (no
+    decoded-row materialization between stages).
 
     Input rows are compressed blocks, partitioned by ``segment`` upstream —
     segments are disjoint doc-id ranges, so a doc's entire profile lands in
@@ -292,13 +342,14 @@ def _make_batch_scorer(
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [p for p in _decode_map(batches) if not p.empty]
+        frames = _decode_map(batches) if decode else batches
+        parts = [p for p in frames if not p.empty]
         if not parts:
             return
         pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
         out = _score_postings(
-            pdf, term_ix, w_mat, qids, avgdl, k,
-            None if tomb_b is None else tomb_b.value,
+            pdf, term_ix, w_mat, has, qids, st, k,
+            None if tomb_b is None else tomb_b.value, sim,
         )
         if out is not None:
             yield out
@@ -1018,10 +1069,7 @@ class InvertedIndex:
     def term_idf(self, terms: list[str], lang: str | None = None) -> dict[str, float]:
         """idf per term from the dictionary (a pyarrow point lookup)."""
         n, _ = self.corpus_stats(lang)
-        return {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in self.term_df(terms, lang).items()
-        }
+        return {t: bm25_idf(n, df) for t, df in self.term_df(terms, lang).items()}
 
     def term_cf(self, terms: list[str], lang: str | None = None) -> dict[str, int]:
         """Collection frequency (total occurrences) per term — the
@@ -1068,49 +1116,6 @@ class InvertedIndex:
         if lang is None:
             return int(self.meta["sum_dl"])
         return int(self.meta["per_lang"].get(lang, {"sum_dl": 0})["sum_dl"])
-
-    def lm_dirichlet_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-        mu: float = 2000.0,
-    ) -> DataFrame:
-        """Dirichlet-smoothed LM top-k served from posting blocks — the
-        same math as ``operators.lmsim.lm_dirichlet_scan`` (Lucene
-        LMDirichletSimilarity) with cf from the dictionary and T from the
-        build-time lineage stats, so the corpus is never scanned. The
-        per-term ``mu * p(t|C)`` constants are computed driver-side from
-        the SAME integers the scan path aggregates, hence bit-identical;
-        contributions are floor-quantized then clamped then integer-summed
-        (order-independent)."""
-        from smse_backend_spark.operators.lmsim import lm_contrib_col
-
-        terms = self._analyze(query_text)
-        cfs = self.term_cf(terms, lang) if terms else {}
-        if not cfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        t_plus_1 = float(self._sum_dl(lang)) + 1.0
-        mup = {
-            t: float(mu) * ((float(cf) + 1.0) / t_plus_1)
-            for t, cf in cfs.items()
-        }
-        mup_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(mup.items()), "term string, mup double"
-            )
-        )
-        decoded = self._decoded(self._blocks(sorted(mup), lang))
-        return (
-            decoded.join(mup_df, "term")
-            .withColumn(
-                "cq", lm_contrib_col(F.col("tf"), F.col("dl"), F.col("mup"), mu)
-            )
-            .groupBy("doc_id")
-            .agg((F.sum("cq").cast("double") / F.lit(1e6)).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
 
     # -- scans ------------------------------------------------------------
 
@@ -1250,10 +1255,7 @@ class InvertedIndex:
         pos = sorted(positive_terms(tree))
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         if not idf:
             return local_frame(self.spark, RESULT_SCHEMA)
         decoded = self._decoded(self._blocks(sorted(idf), lang))
@@ -1294,10 +1296,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         if not idf:
             return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks(sorted(idf), lang)
@@ -1320,8 +1319,11 @@ class InvertedIndex:
     # measured, up to 3.6 M postings (1.16 s against 2.18 s single_pass):
     # ~58 ms + 0.31 us/posting against ~580 ms + 0.45 us/posting. More cores
     # shrink only the Spark slope; scaled linearly the crossover falls to
-    # ~6 M postings at 8 cores and ~2.7 M at 16. The bound also caps the
-    # driver's per-query decode memory.
+    # ~6 M postings at 8 cores and ~2.7 M at 16. The same bound serves
+    # every similarity record: the log/exp-heavy PL2 and IB-SPL also ran
+    # faster in process at every size measured, up to 3.8 M postings
+    # (0.98 / 1.04 s against 1.56 / 1.62 s on the Spark kernel, local[4]).
+    # The bound also caps the driver's per-query decode memory.
     INPROC_MAX_POSTINGS = 4_000_000
 
     def bm25_topk(
@@ -1653,7 +1655,7 @@ class InvertedIndex:
         df_sf = matches.count()
         if df_sf == 0:
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sf + 0.5) / (df_sf + 0.5))
+        idf = bm25_idf(n, df_sf)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1715,7 +1717,7 @@ class InvertedIndex:
         df_sm = matches.count()
         if df_sm == 0:
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sm + 0.5) / (df_sm + 0.5))
+        idf = bm25_idf(n, df_sm)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1784,7 +1786,7 @@ class InvertedIndex:
         df_sn = matches.count()
         if df_sn == 0:
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sn + 0.5) / (df_sn + 0.5))
+        idf = bm25_idf(n, df_sn)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1830,7 +1832,7 @@ class InvertedIndex:
         df_or = matches.count()
         if df_or == 0:
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_or + 0.5) / (df_or + 0.5))
+        idf = bm25_idf(n, df_or)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -1869,10 +1871,7 @@ class InvertedIndex:
             t for t, df in dfs.items()
             if float(df) / float(n) <= float(cutoff_freq)
         )
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
         if rare:
             req = (
@@ -1948,7 +1947,7 @@ class InvertedIndex:
         df_sp = matches.count()
         if df_sp == 0:
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_sp + 0.5) / (df_sp + 0.5))
+        idf = bm25_idf(n, df_sp)
         scored = matches.select(
             "doc_id",
             F.round(
@@ -2065,7 +2064,7 @@ class InvertedIndex:
                 c = F.when(tf > 0, F.lit(1.0)).otherwise(F.lit(0.0))
             else:
                 df_i = float(stats[f"df{i}"] or 0)
-                idf = math.log(1.0 + (n - df_i + 0.5) / (df_i + 0.5))
+                idf = bm25_idf(n, df_i)
                 c = F.when(
                     tf > 0, F.lit(idf) * _tf_norm(tf, dl, avgdl)
                 ).otherwise(F.lit(0.0))
@@ -2242,7 +2241,7 @@ class InvertedIndex:
             if _is_scored(leaf):
                 tf = F.col(f"tf{i}")
                 df_i = float(stats[f"df{i}"] or 0)
-                idf = math.log(1.0 + (n - df_i + 0.5) / (df_i + 0.5))
+                idf = bm25_idf(n, df_i)
                 c = F.when(
                     tf > 0,
                     F.lit(leaf.boost) * (F.lit(idf) * _tf_norm(tf, dl, avgdl)),
@@ -2520,10 +2519,7 @@ class InvertedIndex:
             return self._topk_for_terms(terms, k, lang, "auto")
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         if len(idf) < m:  # fewer terms exist than the constraint demands
             return local_frame(self.spark, RESULT_SCHEMA)
         blocks = self._blocks(sorted(idf), lang)
@@ -2563,23 +2559,15 @@ class InvertedIndex:
         lang: str | None = None,
     ) -> DataFrame:
         """Per-term boosted query (Lucene ``term^boost``): each term's BM25
-        contribution is multiplied by its boost. Implemented by scaling the
-        idf weights before scoring — zero extra plan cost over the plain OR
-        query (the scoring kernels are linear in idf)."""
+        contribution is multiplied by its boost — the BM25 record scored
+        with weights boost x idf (the contribution is linear in them)."""
         per_term: dict[str, float] = {}
         for raw, w in boosts.items():
+            if w < 0:
+                raise ValueError(f"negative boost {w!r} for {raw!r}")
             for t in self._analyze(raw):
                 per_term[t] = float(w)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(sorted(per_term), lang) if per_term and n else {}
-        scaled = {
-            t: per_term[t] * math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
-        if not scaled:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        scored = self._score(self._blocks(sorted(scaled), lang), scaled, avgdl)
-        return self._finish(scored, k)
+        return self._topk_for_terms(sorted(per_term), k, lang, boosts=per_term)
 
     def bm25_topk_synonyms(
         self,
@@ -2615,7 +2603,7 @@ class InvertedIndex:
             if not present:
                 continue
             dfmax = max(dfs[t] for t in present)
-            gidf = math.log(1.0 + (n - dfmax + 0.5) / (dfmax + 0.5))
+            gidf = bm25_idf(n, dfmax)
             rows.extend((t, gi, gidf) for t in present)
         if not rows:
             return local_frame(self.spark, RESULT_SCHEMA)
@@ -2662,10 +2650,7 @@ class InvertedIndex:
         ex_terms = sorted({t for raw in must_not for t in self._analyze(raw)})
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         if not idf:
             return local_frame(self.spark, RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
@@ -2723,10 +2708,7 @@ class InvertedIndex:
         neg_terms = sorted({t for raw in negative for t in self._analyze(raw)})
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         if not idf:
             return local_frame(self.spark, RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
@@ -2808,7 +2790,7 @@ class InvertedIndex:
         df_p = matches.count()
         if df_p == 0:
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_p + 0.5) / (df_p + 0.5))
+        idf = bm25_idf(n, df_p)
         return matches.select(
             "doc_id",
             F.round(
@@ -2881,7 +2863,7 @@ class InvertedIndex:
         # writes the same left-associated chain — bit-identical)
         idf_sum = 0.0
         for t in terms:
-            idf_sum += math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
+            idf_sum += bm25_idf(n, dfs[t])
         nparts = int(
             min(1024, max(self.spark.sparkContext.defaultParallelism,
                           sum(dfs.values()) // 200_000 + 1))
@@ -2956,7 +2938,7 @@ class InvertedIndex:
         df_p = agg.count()
         if df_p == 0:
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = math.log(1.0 + (n - df_p + 0.5) / (df_p + 0.5))
+        idf = bm25_idf(n, df_p)
         return (
             agg.select(
                 "doc_id",
@@ -3068,10 +3050,7 @@ class InvertedIndex:
         dfs = self.term_df(terms, lang)
         if any(t not in dfs for t in terms):
             return local_frame(self.spark, RESULT_SCHEMA)
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         nparts = int(
             min(1024, max(self.spark.sparkContext.defaultParallelism,
                           sum(dfs.values()) // 200_000 + 1))
@@ -3156,10 +3135,7 @@ class InvertedIndex:
         if any(not s for s in srcs):
             return local_frame(self.spark, RESULT_SCHEMA)
         terms = sorted({t for s in srcs for t in s})
-        idf = {
-            t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
-            for t in terms
-        }
+        idf = {t: bm25_idf(n, dfs[t]) for t in terms}
         window = int(max_gaps) + len(srcs) - 1
         nparts = int(
             min(1024, max(self.spark.sparkContext.defaultParallelism,
@@ -3224,10 +3200,7 @@ class InvertedIndex:
             return local_frame(self.spark, RESULT_SCHEMA)
         live_f = tuple(t for t in fterms if t in dfs)
         terms = sorted({t for s in srcs for t in s})
-        idf = {
-            t: math.log(1.0 + (n - dfs[t] + 0.5) / (dfs[t] + 0.5))
-            for t in terms
-        }
+        idf = {t: bm25_idf(n, dfs[t]) for t in terms}
         window = int(max_gaps) + len(srcs) - 1
         read = sorted(set(terms) | set(live_f))
         nparts = int(
@@ -3320,10 +3293,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         empty = "doc_id long, term string, tf long, idf double, contrib double, score double"
         if not idf:
             return local_frame(self.spark, empty)
@@ -3494,10 +3464,7 @@ class InvertedIndex:
         terms = self._analyze(query_text)
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         if not idf:
             return local_frame(self.spark, RESULT_SCHEMA)
         scored = self._score(self._blocks(sorted(idf), lang), idf, avgdl)
@@ -4422,449 +4389,6 @@ class InvertedIndex:
         )
         return out
 
-    def classic_tfidf_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ClassicSimilarity (pre-BM25 TF-IDF) ranking: per-term
-        contribution ``sqrt(tf) * idf^2 / sqrt(dl)`` with ``idf = 1 +
-        ln((N+1)/(df+1))`` — the TFIDFSimilarity formula (sqrt tf
-        saturation, squared idf from query*field weight, 1/sqrt length
-        norm; the coord factor is gone in modern Lucene). Third
-        similarity next to BM25 and Dirichlet LM, same decode plan: the
-        postings of the query terms are the only input, per-term idf
-        ships as driver literals, one per-doc sum, TakeOrderedAndProject.
-        """
-        terms = self._analyze(query_text)
-        n, _avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: 1.0 + math.log((n + 1.0) / (df + 1.0))
-            for t, df in dfs.items()
-        }
-        if not idf:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        decoded = self._decoded(self._blocks(sorted(idf), lang))
-        scored = (
-            decoded.join(self._idf_df(idf), "term")
-            .withColumn(
-                "contrib",
-                F.sqrt(F.col("tf").cast("double"))
-                * (F.col("idf") * F.col("idf"))
-                / F.sqrt(F.col("dl").cast("double")),
-            )
-            .groupBy("doc_id")
-            .agg(F.sum("contrib").alias("score"))
-        )
-        return self._finish(scored, k)
-
-    def _qsum_finish(self, contrib_rows: DataFrame, k: int) -> DataFrame:
-        """Per-doc sum of pre-quantized integer contributions (column
-        ``cq``) -> (doc_id, score) top-k; order-independent because the
-        sum is over longs (the lm_dirichlet discipline)."""
-        return (
-            contrib_rows.groupBy("doc_id")
-            .agg((F.sum("cq").cast("double") / F.lit(1e6)).alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    @staticmethod
-    def _quantize(raw):
-        """floor-half-up to 1e-6 integer units — written identically in
-        every SQL twin (``floor(x * 1e6 + 0.5)::BIGINT``)."""
-        return F.floor(raw * F.lit(1e6) + F.lit(0.5)).cast("long")
-
-    def lm_jelinek_mercer_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-        lam: float = 0.1,
-    ) -> DataFrame:
-        """Lucene ``LMJelinekMercerSimilarity``: linear-interpolation
-        query-likelihood LM (Zhai & Lafferty 2001) — per matched (doc,
-        term) ``ln(1 + (((1-λ)·tf)/dl) / (λ·p(t|C)))`` with ``p(t|C) =
-        (cf+1)/(T+1)``. λ defaults to 0.1 (Lucene's short-query guidance).
-        Plan: the BM25 decode plan verbatim; p(t|C) ships as a per-term
-        broadcast literal from the dictionary's cf column + build-time T
-        (no corpus scan); contributions quantized then integer-summed.
-        See ``operators/similarities.py`` for the determinism rules."""
-        from smse_backend_spark.operators.similarities import jm_constants
-
-        terms = self._analyze(query_text)
-        cfs = self.term_cf(terms, lang) if terms else {}
-        if not cfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        om, lm, p = jm_constants(cfs, self._sum_dl(lang), lam)
-        p_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(p.items()), "term string, p double"
-            )
-        )
-        decoded = self._decoded(self._blocks(sorted(p), lang))
-        raw = F.log(
-            F.lit(1.0)
-            + ((F.lit(om) * F.col("tf").cast("double"))
-               / F.col("dl").cast("double"))
-            / (F.lit(lm) * F.col("p"))
-        )
-        return self._qsum_finish(
-            decoded.join(p_df, "term").withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def _h2_tfn(self, avgdl: float):
-        """DFR normalization H2 (c = 1): ``tf * log2(1 + avgdl/dl)`` —
-        the shared saturation used by the InL2 and IB LL models."""
-        from smse_backend_spark.operators.similarities import LN2
-
-        return F.col("tf").cast("double") * (
-            F.log(F.lit(1.0) + F.lit(avgdl) / F.col("dl").cast("double"))
-            / F.lit(LN2)
-        )
-
-    def dfr_inl2_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``DFRSimilarity(BasicModelIn, AfterEffectL,
-        NormalizationH2)`` — the classic InL2 divergence-from-randomness
-        ranking (Amati & van Rijsbergen 2002): ``log2((N+1)/(df+0.5)) *
-        tfn/(tfn+1)`` with H2 tfn (c = 1). Per-term idf is a driver
-        literal from the dictionary df; same decode plan as BM25."""
-        from smse_backend_spark.operators.similarities import inl2_idf
-
-        terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        if not dfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        idf = inl2_idf(n, dfs)
-        decoded = self._decoded(self._blocks(sorted(idf), lang))
-        tfn = self._h2_tfn(avgdl)
-        raw = F.col("idf") * (tfn / (tfn + F.lit(1.0)))
-        return self._qsum_finish(
-            decoded.join(self._idf_df(idf), "term")
-            .withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def dfr_pl2_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Terrier's **PL2** divergence-from-randomness model (Amati &
-        van Rijsbergen 2002 — BasicModel P(oisson), L(aplace)
-        after-effect, H2 normalization; Lucene shipped BasicModelP until
-        8.0, when it was dropped for allowing negative contributions —
-        kept here as published, unclamped)::
-
-            tfn     = tf * log2(1 + avgdl/dl)              (H2, c = 1)
-            λ_t     = cf_t / N                              (Poisson mean)
-            contrib = (1/(tfn+1)) * ( tfn*log2(tfn/λ_t)
-                                      + (λ_t - tfn)*log2(e)
-                                      + 0.5*log2(2π*tfn) )
-
-        λ_t is a driver literal from the dictionary cf; same decode plan
-        and quantize-then-integer-sum discipline as the other similarity
-        models."""
-        from smse_backend_spark.operators.similarities import LN2
-
-        terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        cfs = self.term_cf(terms, lang) if terms and n else {}
-        if not cfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        lam = {t: float(cf) / n for t, cf in cfs.items()}
-        lam_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(lam.items()), "term string, lam double"
-            )
-        )
-        decoded = self._decoded(self._blocks(sorted(lam), lang))
-        tfn = self._h2_tfn(avgdl)
-        log2e = 1.0 / LN2
-        two_pi = 2.0 * math.pi
-        raw = (F.lit(1.0) / (tfn + F.lit(1.0))) * (
-            tfn * (F.log(tfn / F.col("lam")) / F.lit(LN2))
-            + (F.col("lam") - tfn) * F.lit(log2e)
-            + F.lit(0.5) * (F.log(F.lit(two_pi) * tfn) / F.lit(LN2))
-        )
-        return self._qsum_finish(
-            decoded.join(lam_df, "term").withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def ib_ll_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``IBSimilarity(DistributionLL, LambdaDF,
-        NormalizationH2)`` — information-based log-logistic model
-        (Clinchant & Gaussier 2010): ``log2((tfn + λ_w)/λ_w)`` with
-        ``λ_w = (df+1)/(N+1)`` and H2 tfn. λ_w ships as a per-term
-        broadcast literal; same decode plan as BM25."""
-        from smse_backend_spark.operators.similarities import LN2, ll_lambda
-
-        terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        if not dfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        lw = ll_lambda(n, dfs)
-        lw_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(lw.items()), "term string, lw double"
-            )
-        )
-        decoded = self._decoded(self._blocks(sorted(lw), lang))
-        tfn = self._h2_tfn(avgdl)
-        raw = F.log((tfn + F.col("lw")) / F.col("lw")) / F.lit(LN2)
-        return self._qsum_finish(
-            decoded.join(lw_df, "term").withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def dfi_chi2_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``DFISimilarity(IndependenceChiSquared)`` — divergence
-        from independence (Kocabas, Dinçer & Karaoğlan 2014): expected tf
-        under independence is ``((cf+1)·dl)/(T+1)``; a term only scores
-        when observed tf EXCEEDS expectation, contributing
-        ``log2(χ²+1)`` with ``χ² = (tf-expected)²/expected``. cf+1 ships
-        as a per-term broadcast literal from the dictionary; T from build
-        metadata; same decode plan as BM25."""
-        from smse_backend_spark.operators.similarities import LN2
-
-        terms = self._analyze(query_text)
-        cfs = self.term_cf(terms, lang) if terms else {}
-        if not cfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        t1 = float(self._sum_dl(lang)) + 1.0
-        cfp1 = {t: float(cf) + 1.0 for t, cf in cfs.items()}
-        c_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(cfp1.items()), "term string, cfp1 double"
-            )
-        )
-        decoded = self._decoded(self._blocks(sorted(cfp1), lang))
-        tfd = F.col("tf").cast("double")
-        expected = (F.col("cfp1") * F.col("dl").cast("double")) / F.lit(t1)
-        measure = ((tfd - expected) * (tfd - expected)) / expected
-        raw = F.when(
-            tfd > expected, F.log(measure + F.lit(1.0)) / F.lit(LN2)
-        ).otherwise(F.lit(0.0))
-        return self._qsum_finish(
-            decoded.join(c_df, "term").withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def ib_spl_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``IBSimilarity(DistributionSPL, LambdaDF,
-        NormalizationH2)`` — the smoothed power-law sibling of
-        :meth:`ib_ll_topk` (Clinchant & Gaussier 2010):
-        ``-log2((λ_w^(tfn/(tfn+1)) - λ_w) / (1 - λ_w))`` with
-        ``λ_w = (df+1)/(N+1)`` and H2 tfn. The power is written
-        ``exp(q·ln λ)`` IDENTICALLY on both engines (libm pow differs
-        between JVM and C; exp∘ln composed the same way does not).
-        A term present in EVERY doc makes λ_w = 1 and the model
-        undefined (Lucene returns Infinity there); this engine rejects
-        it loudly instead. Same decode plan as BM25."""
-        from smse_backend_spark.operators.similarities import LN2, ll_lambda
-
-        terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        if not dfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        full = [t for t, df in dfs.items() if df >= n]
-        if full:
-            raise ValueError(
-                f"IB-SPL is undefined for terms in every document: {full}"
-            )
-        lw = ll_lambda(n, dfs)
-        lw_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(lw.items()), "term string, lw double"
-            )
-        )
-        decoded = self._decoded(self._blocks(sorted(lw), lang))
-        tfn = self._h2_tfn(avgdl)
-        q = tfn / (tfn + F.lit(1.0))
-        powed = F.exp(q * F.log(F.col("lw")))
-        raw = -(
-            F.log((powed - F.col("lw")) / (F.lit(1.0) - F.col("lw")))
-            / F.lit(LN2)
-        )
-        return self._qsum_finish(
-            decoded.join(lw_df, "term").withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def _dfi_variant_topk(
-        self, query_text: str, k: int, lang: str | None, kind: str
-    ) -> DataFrame:
-        """Shared DFI scorer for the saturated / standardized independence
-        measures (chi-squared has its own method, kept verbatim since it
-        predates these): expected tf under independence is
-        ``((cf+1)·dl)/(T+1)``; a term only scores when tf EXCEEDS
-        expectation, contributing ``log2(measure + 1)`` where measure is
-
-        * ``saturated``    — ``(tf - expected) / expected``
-        * ``standardized`` — ``(tf - expected) / sqrt(expected)``
-
-        (Kocabas, Dinçer & Karaoğlan 2014; Lucene IndependenceSaturated /
-        IndependenceStandardized). Same decode plan as BM25."""
-        from smse_backend_spark.operators.similarities import LN2
-
-        terms = self._analyze(query_text)
-        cfs = self.term_cf(terms, lang) if terms else {}
-        if not cfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        t1 = float(self._sum_dl(lang)) + 1.0
-        cfp1 = {t: float(cf) + 1.0 for t, cf in cfs.items()}
-        c_df = F.broadcast(
-            self.spark.createDataFrame(
-                sorted(cfp1.items()), "term string, cfp1 double"
-            )
-        )
-        decoded = self._decoded(self._blocks(sorted(cfp1), lang))
-        tfd = F.col("tf").cast("double")
-        expected = (F.col("cfp1") * F.col("dl").cast("double")) / F.lit(t1)
-        if kind == "saturated":
-            measure = (tfd - expected) / expected
-        else:
-            measure = (tfd - expected) / F.sqrt(expected)
-        raw = F.when(
-            tfd > expected, F.log(measure + F.lit(1.0)) / F.lit(LN2)
-        ).otherwise(F.lit(0.0))
-        return self._qsum_finish(
-            decoded.join(c_df, "term").withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def dfi_saturated_topk(
-        self, query_text: str, k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``DFISimilarity(IndependenceSaturated)``."""
-        return self._dfi_variant_topk(query_text, k, lang, "saturated")
-
-    def dfi_standardized_topk(
-        self, query_text: str, k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``DFISimilarity(IndependenceStandardized)``."""
-        return self._dfi_variant_topk(query_text, k, lang, "standardized")
-
-    def boolean_sim_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``BooleanSimilarity``: every matched term scores its
-        boost (= 1), so a doc's score is the count of distinct query
-        terms it contains — tf, dl and corpus stats are ignored. Exact
-        integers, no quantization. Decode plan unchanged."""
-        terms = self._analyze(query_text)
-        if not terms:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        live = sorted(set(terms))
-        decoded = self._decoded(self._blocks(live, lang))
-        return (
-            decoded.groupBy("doc_id")
-            .agg(F.countDistinct("term").cast("double").alias("score"))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    def _ax_tfn(self, avgdl: float):
-        """Axiomatic F2 length-normalized tf (Fang & Zhai 2005):
-        ``tf / (tf + s + s·dl/avgdl)`` with Lucene's default s = 0.5 —
-        shared by the F2EXP and F2LOG models, same parenthesization as
-        the oracle's ``_AX_TFN``."""
-        from smse_backend_spark.operators.similarities import AX_S
-
-        tfd = F.col("tf").cast("double")
-        return tfd / (
-            tfd
-            + F.lit(AX_S)
-            + F.lit(AX_S) * F.col("dl").cast("double") / F.lit(avgdl)
-        )
-
-    def _ax_topk(
-        self, idf: dict[str, float], avgdl: float, k: int, lang: str | None
-    ) -> DataFrame:
-        """Shared Axiomatic scorer: per-term idf ships as a broadcast
-        literal (driver-side from the dictionary's integer df), F2 tfn
-        on the decoded postings, quantize-then-integer-sum — the same
-        decode plan and determinism discipline as every other pluggable
-        similarity (no corpus scan, one per-doc partial agg,
-        TakeOrderedAndProject)."""
-        decoded = self._decoded(self._blocks(sorted(idf), lang))
-        raw = F.col("idf") * self._ax_tfn(avgdl)
-        return self._qsum_finish(
-            decoded.join(self._idf_df(idf), "term")
-            .withColumn("cq", self._quantize(raw)),
-            k,
-        )
-
-    def axiomatic_f2exp_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``AxiomaticF2EXP`` (Fang & Zhai 2005, SIGIR — the
-        axiomatic retrieval family): ``((N+1)/df)^k * tf/(tf + s +
-        s·dl/avgdl)`` with Lucene's defaults s=0.5, k=0.35. Completes
-        the pluggable-similarity surface next to BM25 / Classic /
-        Dirichlet / JM / InL2 / PL2 / IB-LL / DFI / Boolean."""
-        from smse_backend_spark.operators.similarities import f2exp_idf
-
-        terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        if not dfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        return self._ax_topk(f2exp_idf(n, dfs), avgdl, k, lang)
-
-    def axiomatic_f2log_topk(
-        self,
-        query_text: str,
-        k: int = DEFAULT_TOP_K,
-        lang: str | None = None,
-    ) -> DataFrame:
-        """Lucene ``AxiomaticF2LOG``: ``ln((N+1)/df)`` idf over the same
-        F2 normalized tf — the log-idf sibling of :meth:`axiomatic_f2exp_topk`."""
-        from smse_backend_spark.operators.similarities import f2log_idf
-
-        terms = self._analyze(query_text)
-        n, avgdl = self.corpus_stats(lang)
-        dfs = self.term_df(terms, lang) if terms and n else {}
-        if not dfs:
-            return local_frame(self.spark, RESULT_SCHEMA)
-        return self._ax_topk(f2log_idf(n, dfs), avgdl, k, lang)
-
     def synonym_query_topk(
         self,
         groups: list[list[str]],
@@ -4908,10 +4432,7 @@ class InvertedIndex:
             gdf[gid] = max(gdf.get(gid, 0), df)
         if not gdf:
             return local_frame(self.spark, RESULT_SCHEMA)
-        gidf = {
-            gid: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for gid, df in gdf.items()
-        }
+        gidf = {gid: bm25_idf(n, df) for gid, df in gdf.items()}
         live = sorted(t for t in terms if t in dfs)
         gmap = F.broadcast(
             self.spark.createDataFrame(
@@ -5538,65 +5059,82 @@ class InvertedIndex:
             .limit(k)
         )
 
+    def similarity_topk(
+        self,
+        query_text: str,
+        sim: str | Similarity,
+        k: int = DEFAULT_TOP_K,
+        lang: str | None = None,
+    ) -> DataFrame:
+        """Top-k under a similarity record (or its ``SIMILARITIES`` name,
+        e.g. ``"lm"``, ``"inl2"``, ``"f2exp"``): the Lucene similarity
+        family served from posting blocks plus the dictionary's df / cf
+        and the build-time N, T, avgdl — the corpus is never scanned.
+        Routed like ``bm25_topk(mode="auto")``: in-process below
+        ``INPROC_MAX_POSTINGS`` summed df, else the segment-shuffled Spark
+        kernel. Each ``operators/similarities.py`` record has a DuckDB
+        ``*_oracle_sql`` twin."""
+        if isinstance(sim, str):
+            sim = SIMILARITIES[sim]
+        return self._topk_for_terms(self._analyze(query_text), k, lang, sim=sim)
+
     def _topk_for_terms(
         self,
         terms: list[str],
         k: int,
         lang: str | None,
-        mode: str,
+        mode: str = "auto",
+        sim: Similarity = BM25,
+        boosts: dict[str, float] | None = None,
     ) -> DataFrame:
+        """The one routing function: ``sim``'s per-term constants (times
+        ``boosts``, for BM25) from the dictionary, then in-process, the
+        Spark kernel, or — BM25 only — the Column-algebra ``exhaustive``
+        / block-max ``pruned`` plans."""
         n, avgdl = self.corpus_stats(lang)
         dfs = self.term_df(terms, lang) if terms and n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
-        if not idf:
+        if not dfs:
             return local_frame(self.spark, RESULT_SCHEMA)
+        st = CorpusStats(n, avgdl, float(self._sum_dl(lang)))
+        stat = dfs if sim.stat == "df" else self.term_cf(sorted(dfs), lang)
+        w = {t: sim.const(v, st) for t, v in stat.items()}
+        if boosts is not None:
+            w = {t: boosts[t] * c for t, c in w.items()}
+        n_postings = sum(dfs.values())
         if mode == "auto":
-            n_postings = sum(dfs.values())
             if n_postings < self.INPROC_MAX_POSTINGS:
                 self._load_tombs()
                 if self._tomb_df is None:
-                    return self._inproc_topk(idf, avgdl, k, lang)
+                    return self._inproc_topk(w, st, k, lang, sim)
             mode = (
-                "single_pass"
-                if n_postings < self.PRUNE_MIN_POSTINGS
-                else "pruned"
+                "pruned"
+                if sim is BM25 and n_postings >= self.PRUNE_MIN_POSTINGS
+                else "single_pass"
             )
         if mode == "single_pass":
-            self._load_tombs()
-            if self._tomb_df is not None:
-                # tombstone set too big for the in-kernel array filter —
-                # the join-based decode path stays exact at any delete size
-                mode = "exhaustive"
-        if mode == "single_pass":
-            # terms are pure [a-z0-9]+ tokens, so the joined string
-            # round-trips exactly through the kernel's query_terms()
             return (
                 self._batch_kernel_topk(
-                    {0: " ".join(sorted(idf))}, idf, avgdl, k, lang,
-                    est_postings=sum(dfs.values()),
+                    {0: sorted(w)}, w, st, k, lang, n_postings, sim
                 )
                 .select("doc_id", "score")
                 .orderBy(F.desc("score"), F.asc("doc_id"))
             )
-        blocks = self._blocks(sorted(idf), lang)
+        blocks = self._blocks(sorted(w), lang)
         if mode == "exhaustive":
-            scored = self._score(blocks, idf, avgdl)
-            return self._finish(scored, k)
-        return self._pruned_topk(blocks, idf, avgdl, k)
+            return self._finish(self._score(blocks, w, avgdl), k)
+        return self._pruned_topk(blocks, w, avgdl, k)
 
     def _inproc_topk(
-        self, idf: dict[str, float], avgdl: float, k: int, lang: str | None
+        self, w: dict[str, float], st: CorpusStats, k: int, lang: str | None,
+        sim: Similarity,
     ) -> DataFrame:
         """Top-k on the driver, no Spark job: pyarrow reads the matched
-        posting blocks, the batch kernel's :func:`_score_postings` scores
-        them, and the ranked rows come back as a local DataFrame (already
-        ordered: an orderBy on top would cost three jobs)."""
+        posting blocks, :func:`_score_postings` scores them, and the
+        ranked rows come back as a local DataFrame (already ordered: an
+        orderBy on top would cost three jobs)."""
         import pyarrow as pa
 
-        terms = sorted(idf)
+        terms = sorted(w)
         blocks = self._read_blocks(
             terms, lang, ["term", "first_doc", "gaps", "tfs", "dls"]
         )
@@ -5605,8 +5143,9 @@ class InvertedIndex:
             top = _score_postings(
                 _decode_frame(blocks.to_pandas()),
                 {t: i for i, t in enumerate(terms)},
-                np.array([[idf[t]] for t in terms], dtype=np.float64),
-                np.zeros(1, dtype=np.int64), avgdl, k, self._tomb_arr,
+                np.array([[w[t]] for t in terms], dtype=np.float64),
+                np.ones((len(terms), 1), dtype=bool),
+                np.zeros(1, dtype=np.int64), st, k, self._tomb_arr, sim,
             )
         if top is None:
             return local_frame(self.spark, RESULT_SCHEMA)
@@ -5634,38 +5173,44 @@ class InvertedIndex:
         (query, doc)) shuffles |queries| x |postings| rows — two orders of
         magnitude more at realistic batch sizes.
         """
-        from pyspark.sql import Window
-
         n, avgdl = self.corpus_stats(lang)
-        all_terms = sorted({t for q in queries.values() for t in self._analyze(q)})
+        per_q = {qid: self._analyze(q) for qid, q in queries.items()}
+        all_terms = sorted({t for ts in per_q.values() for t in ts})
         idf = self.term_idf(all_terms, lang) if all_terms and n else {}
         if not idf:
             return local_frame(
                 self.spark, "query_id long, rank int, doc_id long, score double"
             )
-        return self._batch_kernel_topk(queries, idf, avgdl, k, lang)
-
-    def _batch_kernel_topk(
-        self,
-        queries: dict[int, str],
-        idf: dict[str, float],
-        avgdl: float,
-        k: int,
-        lang: str | None,
-        est_postings: int | None = None,
-    ) -> DataFrame:
-        """Single-pass exact scoring: one job, one compressed-block shuffle."""
-        from pyspark.sql import Window
-
         self._load_tombs()
         if self._tomb_df is not None:
             raise ValueError(
                 "tombstone set exceeds TOMB_ARRAY_CAP for the in-kernel "
                 "batch path — run compact_index to apply deletes physically, "
-                "or query per-query with mode='exhaustive'"
+                "or query per-query with bm25_topk"
             )
-        per_q = {qid: self._analyze(q) for qid, q in queries.items()}
-        matched = sorted(idf)
+        st = CorpusStats(n, avgdl, float(self._sum_dl(lang)))
+        return self._batch_kernel_topk(per_q, idf, st, k, lang)
+
+    def _batch_kernel_topk(
+        self,
+        per_q: dict[int, list[str]],
+        w: dict[str, float],
+        st: CorpusStats,
+        k: int,
+        lang: str | None,
+        est_postings: int | None = None,
+        sim: Similarity = BM25,
+    ) -> DataFrame:
+        """Single-pass exact scoring of analyzed queries: one job, one
+        compressed-block shuffle. With a tombstone set over
+        ``TOMB_ARRAY_CAP`` (no array to ship to the kernel) it takes the
+        one fallback instead: decode, drop the deleted docs with
+        :meth:`_live`'s anti-join, and score the live rows partitioned by
+        doc with the same kernel."""
+        from pyspark.sql import Window
+
+        self._load_tombs()
+        matched = sorted(w)
         term_ix = {t: i for i, t in enumerate(matched)}
         qids = sorted(per_q)
         # memory bound inside the kernel is (partition postings) x (queries);
@@ -5681,31 +5226,38 @@ class InvertedIndex:
             min(4096, max(self.spark.sparkContext.defaultParallelism,
                           total_postings // 200_000 + 1))
         )
-        # shuffle COMPRESSED blocks by segment: segments are disjoint doc-id
-        # ranges, so this is a doc-partitioning that moves ~1% of the bytes
-        # a post-decode doc_id repartition would
-        repart = self._blocks(matched, lang).select(
-            "segment", "term", "first_doc", "gaps", "tfs", "dls"
-        ).repartition(nparts, "segment")
+        blocks = self._blocks(matched, lang)
+        decode = self._tomb_df is None
+        if decode:
+            # shuffle COMPRESSED blocks by segment: segments are disjoint
+            # doc-id ranges, so this is a doc-partitioning that moves ~1%
+            # of the bytes a post-decode doc_id repartition would
+            rows = blocks.select(
+                "segment", "term", "first_doc", "gaps", "tfs", "dls"
+            ).repartition(nparts, "segment")
+        else:
+            rows = self._decoded(blocks).repartition(nparts, "doc_id")
 
         out = None
         for chunk in chunks:
             w_mat = np.zeros((len(matched), len(chunk)), dtype=np.float64)
+            has = np.zeros(w_mat.shape, dtype=bool)
             for j, qid in enumerate(chunk):
                 for t in per_q[qid]:
-                    if t in idf:
-                        w_mat[term_ix[t], j] = idf[t]
+                    if t in w:
+                        w_mat[term_ix[t], j] = w[t]
+                        has[term_ix[t], j] = True
             kernel = _make_batch_scorer(
-                term_ix, w_mat, np.array(chunk), avgdl, k,
-                tomb_b=self._tomb_bcast,
+                term_ix, w_mat, has, np.array(chunk), st, k,
+                tomb_b=self._tomb_bcast, sim=sim, decode=decode,
             )
-            local_topk = repart.mapInPandas(
+            local_topk = rows.mapInPandas(
                 kernel, "query_id long, doc_id long, score double"
             )
             out = local_topk if out is None else out.unionByName(local_topk)
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+        win = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
         return (
-            out.withColumn("rank", F.row_number().over(w))
+            out.withColumn("rank", F.row_number().over(win))
             .filter(F.col("rank") <= k)
             .select("query_id", "rank", "doc_id", "score")
         )
@@ -5792,10 +5344,7 @@ def fielded_indexed_topk(
             continue
         n, avgdl = idx.corpus_stats(None)
         dfs = idx.term_df(terms, None) if n else {}
-        idf = {
-            t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-            for t, df in dfs.items()
-        }
+        idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
         if not idf:
             continue
         scored = idx._score(idx._blocks(sorted(idf), None), idf, avgdl)
@@ -5874,10 +5423,7 @@ def combined_fields_indexed_topk(
             df_max[t] = max(df_max.get(t, 0), int(d))
     if not df_max:
         return empty
-    idf = {
-        t: math.log(1.0 + (n - d + 0.5) / (d + 0.5))
-        for t, d in df_max.items()
-    }
+    idf = {t: bm25_idf(n, d) for t, d in df_max.items()}
     parts = []
     for f in fields:
         present = sorted(dfs_per_field[f])
@@ -5990,10 +5536,7 @@ def sharded_bm25_topk(
         for s in shards:
             for t, d in s.term_df(terms, lang).items():
                 dfs[t] = dfs.get(t, 0) + int(d)
-    idf = {
-        t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        for t, df in dfs.items()
-    }
+    idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
     if not idf:
         return local_frame(spark, RESULT_SCHEMA)
     parts = [
@@ -6076,10 +5619,7 @@ def routed_bm25_topk(
         for s in shards:
             for t, d in s.term_df(terms, lang).items():
                 dfs[t] = dfs.get(t, 0) + int(d)
-    idf = {
-        t: math.log(1.0 + (n - df + 0.5) / (df + 0.5))
-        for t, df in dfs.items()
-    }
+    idf = {t: bm25_idf(n, df) for t, df in dfs.items()}
     if not idf:
         return local_frame(spark, RESULT_SCHEMA)
     scored = owner._score(owner._blocks(sorted(idf), lang), idf, avgdl)

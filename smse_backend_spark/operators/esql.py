@@ -175,6 +175,10 @@ class _P:
                     self.next()
                     lits.append(self.prim())
                 self.expect(")")
+                # literals only: a bare name would be a string on the
+                # Spark emitter but a column reference in SQL
+                if any(lit[0] not in ("str", "num", "int") for lit in lits):
+                    raise ValueError("ES|QL: IN expects a list of literals")
                 node = ("in", node, lits)
             else:
                 pat = self.prim()

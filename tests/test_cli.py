@@ -466,7 +466,7 @@ def test_cli_similarity_family(tmp_path, spark, sf_smoke, capsys):
               "--similarity", "f2exp", "--master", "local[4]"])
     hits = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     want = [{"doc_id": r["doc_id"], "score": r["score"]}
-            for r in idx.axiomatic_f2exp_topk("hash join", 10).collect()]
+            for r in idx.similarity_topk("hash join", "f2exp", 10).collect()]
     assert hits == want
 
 

@@ -349,6 +349,20 @@ def test_esql_in_like_rlike_twins(spark, sf_smoke):
         assert s == o and len(s) > 0, q
 
 
+def test_esql_in_list_takes_literals_only(spark, sf_smoke):
+    """A bare name in an IN list would compare with the string on Spark
+    but with the column in SQL, so the parser rejects it; a literal list
+    (strings and integers) matches on both emitters."""
+    with pytest.raises(ValueError, match="IN expects a list of literals"):
+        parse_esql("FROM events | WHERE event_type IN (a) | LIMIT 1")
+    with pytest.raises(ValueError, match="IN expects a list of literals"):
+        parse_esql('FROM events | WHERE event_type IN ("view", a) | LIMIT 1')
+    q = ('FROM documents | WHERE lang IN ("en", "de") AND doc_id IN (1, 2, 3) '
+         "| KEEP doc_id, lang | SORT doc_id ASC | LIMIT 10")
+    s, o = _both(spark, sf_smoke, q)
+    assert s == o and len(s) == 2
+
+
 def test_esql_rlike_is_whole_string(spark, sf_smoke):
     """RLIKE follows the ES regexp query: the pattern must match the
     ENTIRE value, not a substring."""

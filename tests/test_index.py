@@ -818,6 +818,9 @@ def test_boosted_search_vs_oracle(spark, index, sf_smoke):
         want = [tuple(r) for r in
                 con.execute(bm25_boosted_oracle_sql(boosts, 10, lang)).fetchall()]
         assert got == want, (boosts, lang, got[:3], want[:3])
+    # Lucene/ES reject negative boosts (the block-max bound assumes >= 0)
+    with pytest.raises(ValueError, match="negative boost"):
+        index.bm25_topk_boosted({"hash": -1.0}, 10)
 
 
 def test_synonym_search_vs_oracle(spark, index, sf_smoke):
@@ -1778,68 +1781,73 @@ def test_intervals_derivation(pos_index, oracle_con):
     assert u == un
 
 
+def _spark_kernel(index):
+    """A second reader of ``index`` whose similarity queries all take the
+    segment-shuffled Spark kernel (nothing is below the in-process bound)."""
+    ix = InvertedIndex(index.spark, index.path)
+    ix.INPROC_MAX_POSTINGS = 0
+    return ix
+
+
+SIM_CASES = [("hash join merge scan", None), ("vector", None),
+             ("batch stream spark window", "en"), ("zzzqqabsent", None)]
+
+
+def _assert_sim_matches(index, name, osql, oracle_con, k=50):
+    """``similarity_topk(name)`` == its DuckDB twin on every case in
+    process, and on the flagship case through the Spark kernel too."""
+    for ix, cases in ((index, SIM_CASES),
+                      (_spark_kernel(index), SIM_CASES[:1])):
+        for q, lang in cases:
+            got = [tuple(r) for r in
+                   ix.similarity_topk(q, name, k, lang).collect()]
+            want = [tuple(w) for w in
+                    oracle_con.execute(osql(q, k, lang)).fetchall()]
+            assert got == want, (name, ix.INPROC_MAX_POSTINGS, q, lang,
+                                 got[:3], want[:3])
+
+
 def test_classic_tfidf_vs_oracle(index, oracle_con):
-    """ClassicSimilarity == DuckDB twin; ranking genuinely differs from
-    BM25 on a mixed-df query (sqrt saturation + squared idf reorder)."""
+    """ClassicSimilarity == DuckDB twin on both paths; ranking genuinely
+    differs from BM25 on a mixed-df query (sqrt saturation + squared idf
+    reorder)."""
     from smse_backend_spark.operators.search import classic_tfidf_oracle_sql
 
-    for q, lang in [("hash join merge scan", None), ("vector", None),
-                    ("batch stream spark window", "en"),
-                    ("zzzqqabsent", None)]:
-        got = [tuple(r) for r in index.classic_tfidf_topk(q, 50, lang).collect()]
-        want = [tuple(w) for w in oracle_con.execute(
-            classic_tfidf_oracle_sql(q, 50, lang)).fetchall()]
-        assert got == want, (q, lang, got[:3], want[:3])
+    _assert_sim_matches(index, "tfidf", classic_tfidf_oracle_sql, oracle_con)
     q = "hash join merge scan"
-    tfidf = [r["doc_id"] for r in index.classic_tfidf_topk(q, 50).collect()]
+    tfidf = [r["doc_id"] for r in index.similarity_topk(q, "tfidf", 50).collect()]
     bm25 = [r["doc_id"] for r in index.bm25_topk(q, 50).collect()]
     assert tfidf and tfidf != bm25
 
 
 def test_similarity_family_vs_oracle(index, oracle_con):
-    """The four round-4 similarity models (JM LM, DFR InL2, IB LL, DFI
-    chi2) and BooleanSimilarity each == their DuckDB scan twin, on mixed
-    queries including lang-restricted and absent-term inputs."""
+    """The round-4 similarity models (JM LM, DFR InL2, IB LL / SPL, the
+    three DFI measures) and BooleanSimilarity each == their DuckDB scan
+    twin on both paths, on mixed queries including lang-restricted and
+    absent-term inputs."""
     from smse_backend_spark.operators import similarities as S
 
-    cases = [("hash join merge scan", None), ("vector", None),
-             ("batch stream spark window", "en"), ("zzzqqabsent", None)]
-    pairs = [
-        (lambda q, k, lg: index.lm_jelinek_mercer_topk(q, k, lg),
-         S.lm_jelinek_mercer_oracle_sql),
-        (lambda q, k, lg: index.dfr_inl2_topk(q, k, lg),
-         S.dfr_inl2_oracle_sql),
-        (lambda q, k, lg: index.ib_ll_topk(q, k, lg), S.ib_ll_oracle_sql),
-        (lambda q, k, lg: index.ib_spl_topk(q, k, lg), S.ib_spl_oracle_sql),
-        (lambda q, k, lg: index.dfi_chi2_topk(q, k, lg),
-         S.dfi_chi2_oracle_sql),
-        (lambda q, k, lg: index.dfi_saturated_topk(q, k, lg),
-         S.dfi_saturated_oracle_sql),
-        (lambda q, k, lg: index.dfi_standardized_topk(q, k, lg),
-         S.dfi_standardized_oracle_sql),
-        (lambda q, k, lg: index.boolean_sim_topk(q, k, lg),
-         S.boolean_sim_oracle_sql),
-    ]
-    for fn, osql in pairs:
-        for q, lang in cases:
-            got = [tuple(r) for r in fn(q, 50, lang).collect()]
-            want = [tuple(w) for w in
-                    oracle_con.execute(osql(q, 50, lang)).fetchall()]
-            assert got == want, (osql.__name__, q, lang, got[:3], want[:3])
+    for name, osql in [
+        ("jm", S.lm_jelinek_mercer_oracle_sql),
+        ("inl2", S.dfr_inl2_oracle_sql),
+        ("ib", S.ib_ll_oracle_sql),
+        ("ib_spl", S.ib_spl_oracle_sql),
+        ("dfi", S.dfi_chi2_oracle_sql),
+        ("dfi_saturated", S.dfi_saturated_oracle_sql),
+        ("dfi_standardized", S.dfi_standardized_oracle_sql),
+        ("boolean", S.boolean_sim_oracle_sql),
+    ]:
+        _assert_sim_matches(index, name, osql, oracle_con)
     # the models genuinely re-rank: on the mixed-df flagship query the
     # four scored orders are not all identical to BM25's
     q = "hash join merge scan"
     bm25 = [r["doc_id"] for r in index.bm25_topk(q, 50).collect()]
-    orders = {
-        "jm": [r["doc_id"] for r in
-               index.lm_jelinek_mercer_topk(q, 50).collect()],
-        "inl2": [r["doc_id"] for r in index.dfr_inl2_topk(q, 50).collect()],
-        "ll": [r["doc_id"] for r in index.ib_ll_topk(q, 50).collect()],
-        "dfi": [r["doc_id"] for r in index.dfi_chi2_topk(q, 50).collect()],
-    }
+    orders = {name: [r["doc_id"] for r in
+                     index.similarity_topk(q, name, 50).collect()]
+              for name in ("jm", "inl2", "ib", "dfi")}
     assert any(v != bm25 for v in orders.values())
     # BooleanSimilarity is coord counting: scores are small integers
-    bs = index.boolean_sim_topk(q, 10).collect()
+    bs = index.similarity_topk(q, "boolean", 10).collect()
     assert bs and all(float(r["score"]).is_integer() for r in bs)
     assert max(r["score"] for r in bs) <= 4.0
 
@@ -1860,9 +1868,9 @@ def test_ib_spl_rejects_ubiquitous_term(spark, tmp_path):
                 block_size=4, n_batches=1)
     ix = InvertedIndex(spark, out)
     with pytest.raises(ValueError, match="undefined for terms"):
-        ix.ib_spl_topk("common", 5)
+        ix.similarity_topk("common", "ib_spl", 5)
     # a non-ubiquitous term works
-    assert ix.ib_spl_topk("word3", 5).count() == 1
+    assert ix.similarity_topk("word3", "ib_spl", 5).count() == 1
 
 
 def test_span_contain_vs_oracle(pos_index, oracle_con):

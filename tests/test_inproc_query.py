@@ -1,11 +1,14 @@
-"""The in-process BM25 path (``mode="auto"`` below
+"""The in-process path (``mode="auto"`` below
 ``InvertedIndex.INPROC_MAX_POSTINGS``) against the Spark paths and the numpy
-oracle, its zero-job property, and the driver-side reads behind it:
-row-group-pruned term lookups and lineage-committed batches only."""
+oracle, its zero-job property for BM25 and every similarity record, the
+records' soft-delete answers on all three paths (in-process, Spark kernel,
+tombstone fallback), and the driver-side reads behind it: row-group-pruned
+term lookups and lineage-committed batches only."""
 
 from __future__ import annotations
 
 import shutil
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.dataset as ds
@@ -18,6 +21,7 @@ from smse_backend_spark.index import deletes
 from smse_backend_spark.index import lineage as lin
 from smse_backend_spark.index.build import build_index
 from smse_backend_spark.index.query import InvertedIndex, _terms_filter
+from smse_backend_spark.operators.similarities import SIMILARITIES
 from smse_backend_spark.oracle.bm25_numpy import bm25_topk_py
 
 MODES = ("auto", "single_pass", "exhaustive", "pruned")
@@ -148,6 +152,89 @@ def test_auto_runs_no_job_below_the_constant(spark, plain_dir, pydocs):
                          lambda: idx.bm25_topk(query, 10).collect())
     assert n_jobs > 0
     assert [r["doc_id"] for r in rows] == [d for d, _ in want]
+
+
+def test_batch_chunk_of_one_ranks_only_its_own_docs(spark, plain_dir, pydocs):
+    """The batch kernel scores queries in chunks of 64, so the 65th query
+    is a chunk of one over partitions that still hold the other queries'
+    postings. It (a rare term, fewer than k hits) and an absent-term query
+    must rank only docs with their own terms, as ``bm25_topk`` does."""
+    df = Counter(t for _d, c, _l in pydocs for t in set(tokenize_py(c)))
+    terms = [t for t, _n in df.most_common()]
+    rare, k = terms[-1], df[terms[-1]] + 10
+    queries = {i: f"{terms[i % 20]} {terms[(3 * i + 1) % 20]}"
+               for i in range(63)}
+    queries[63] = "nonexistentterm"
+    queries[64] = rare
+    idx = InvertedIndex(spark, plain_dir)
+    got = {}
+    for r in idx.bm25_topk_batch(queries, k).collect():
+        got.setdefault(r["query_id"], []).append((r["rank"], r["doc_id"], r["score"]))
+    for qid, text in queries.items():
+        want = _ranked(idx, text, None, k, "auto")
+        assert [(d, s) for _r, d, s in sorted(got.get(qid, []))] == want, qid
+    assert 63 not in got
+    assert 0 < len(got[64]) < k
+
+
+def test_similarity_runs_no_job_below_the_constant(spark, plain_dir):
+    idx = InvertedIndex(spark, plain_dir)
+    for name in SIMILARITIES:
+        rows, n_jobs = _jobs(
+            spark, f"inproc-sim-{name}",
+            lambda: idx.similarity_topk("hash join merge scan", name, 10).collect(),
+        )
+        assert rows and n_jobs == 0, name
+
+
+@pytest.fixture(scope="module")
+def tiny_dir(spark, tmp_path_factory):
+    """24 short docs over five shared words (none in every doc, so IB-SPL
+    is defined) plus one private word each, in two langs."""
+    words = ["alpha", "beta", "gamma", "delta", "omega"]
+    rows = []
+    for i in range(24):
+        toks = [words[(i + j) % 5] for j in range(1 + i % 4)]
+        toks += [f"w{i}"] * (1 + i % 3)
+        rows.append((i, "r", f"p{i}", "c", "en" if i % 3 else "py",
+                     " ".join(toks)))
+    corpus = spark.createDataFrame(
+        rows, "doc_id long, repo string, path string, commit string, "
+              "lang string, content string",
+    )
+    out = str(tmp_path_factory.mktemp("tinysim"))
+    build_index(spark, corpus, out, segment_size=8, n_buckets=2,
+                block_size=4, n_batches=2)
+    return out
+
+
+def test_similarity_soft_delete_on_every_path(spark, tiny_dir, tmp_path):
+    """Soft deletes keep the stats, so after ``delete_docs`` each record's
+    answer is its pre-delete list minus the deleted docs — in process,
+    on the Spark kernel, and on the tombstone fallback (set over
+    ``TOMB_ARRAY_CAP``: decode, anti-join, the same kernel)."""
+    out = _copy(tiny_dir, tmp_path, "simdel")
+    query = "alpha gamma omega"
+    before = {
+        name: [(r["doc_id"], r["score"]) for r in
+               InvertedIndex(spark, out).similarity_topk(query, name, 100).collect()]
+        for name in SIMILARITIES
+    }
+    gone = {0, 4, 9, 14, 20}
+    deletes.delete_docs(spark, out, sorted(gone))
+    kernel = InvertedIndex(spark, out)
+    kernel.INPROC_MAX_POSTINGS = 0
+    fallback = InvertedIndex(spark, out)
+    fallback.TOMB_ARRAY_CAP = 0
+    for name, was in before.items():
+        want = [(d, sc) for d, sc in was if d not in gone]
+        assert len(want) < len(was), name
+        for path, ix in (("inproc", InvertedIndex(spark, out)),
+                         ("kernel", kernel), ("fallback", fallback)):
+            got = [(r["doc_id"], r["score"]) for r in
+                   ix.similarity_topk(query, name, 100).collect()]
+            assert got == want, (name, path, got[:3], want[:3])
+    assert fallback._tomb_df is not None and fallback._tomb_arr is None
 
 
 def test_uncommitted_batch_dir_is_never_read(spark, plain_dir, tmp_path):

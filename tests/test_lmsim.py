@@ -40,10 +40,15 @@ def test_lm_index_rank_identical_to_scan(spark, sf_smoke):
     build_index(spark, corpus, out, segment_size=256, n_buckets=8,
                 block_size=64, n_batches=2)
     idx = InvertedIndex(spark, out)
+    kernel = InvertedIndex(spark, out)
+    kernel.INPROC_MAX_POSTINGS = 0  # route to the Spark kernel
     for lang in (None, "python"):
         scan = sorted(map(tuple, lm_dirichlet_scan(corpus, Q, 10, lang=lang).collect()))
-        served = sorted(map(tuple, idx.lm_dirichlet_topk(Q, 10, lang=lang).collect()))
+        served = sorted(map(tuple, idx.similarity_topk(Q, "lm", 10, lang=lang).collect()))
         assert scan == served, lang
+        if lang is None:
+            served = sorted(map(tuple, kernel.similarity_topk(Q, "lm", 10).collect()))
+            assert scan == served, "spark kernel"
 
 
 def test_lm_formula_analytical(spark):

@@ -148,16 +148,29 @@ def test_contract_entries_have_no_row_python_udfs(spark, sf_smoke):
 
 # -- final-session ops ------------------------------------------------------
 
+def _kernel_plan(index, sim):
+    """Plan of a ``sim`` query pinned to the Spark kernel (a small query
+    answers in-process, which has no plan)."""
+    ix = InvertedIndex(index.spark, index.path)
+    ix.INPROC_MAX_POSTINGS = 0
+    return plan_of(ix.similarity_topk(Q, sim, 10))
+
+
+def _assert_postings_only(plan):
+    """A similarity served from the index alone: the postings scan with
+    its pushed term predicates, no documents read, no row-at-a-time
+    Python UDF, no sort-merge join."""
+    assert "postings" in plan and "PushedFilters" in plan
+    assert "In(term" in plan or "EqualTo(term" in plan
+    assert "documents.parquet" not in plan
+    assert "BatchEvalPython" not in plan
+    assert "SortMergeJoin" not in plan
+
+
 def test_lm_dirichlet_index_path_never_reads_corpus(index):
     """The LM similarity serves entirely from postings + dictionary +
-    lineage stats: the plan must not contain a documents/corpus scan —
-    only the postings parquet read."""
-    plan = plan_of(index.lm_dirichlet_topk(Q, 10))
-    assert "documents.parquet" not in plan
-    assert "postings" in plan
-    assert "TakeOrderedAndProject" in plan
-    # the per-term mu*p constants join must be broadcast (tiny frame)
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    lineage stats: the kernel plan reads no documents/corpus."""
+    _assert_postings_only(_kernel_plan(index, "lm"))
 
 
 def test_composite_after_key_filter_applies_before_aggregate(spark, corpus,
@@ -230,13 +243,10 @@ def test_sliced_hits_slice_filter_precedes_sort(index):
 
 
 def test_axiomatic_index_path_never_reads_corpus(index):
-    """F2EXP/F2LOG run from postings + dictionary only: the plan must
-    contain the postings parquet scan with pushed term filters and NO
-    scan of the documents parquet."""
-    plan = plan_of(index.axiomatic_f2exp_topk(Q, 10))
-    assert "TakeOrderedAndProject" in plan
-    assert "PushedFilters" in plan
-    assert "documents.parquet" not in plan
+    """F2EXP/F2LOG run from postings + dictionary only: the kernel plan
+    has the postings scan with pushed term filters and NO scan of the
+    documents parquet."""
+    _assert_postings_only(_kernel_plan(index, "f2exp"))
 
 
 def test_sampler_cap_is_take_ordered(corpus):

@@ -414,7 +414,7 @@ def test_dfr_pl2_vs_oracle(plain_index, con, query, lang):
     from smse_backend_spark.operators.similarities import dfr_pl2_oracle_sql
 
     got = [(r["doc_id"], r["score"])
-           for r in plain_index.dfr_pl2_topk(query, 10, lang).collect()]
+           for r in plain_index.similarity_topk(query, "pl2", 10, lang).collect()]
     want = [tuple(w) for w in
             con.execute(dfr_pl2_oracle_sql(query, 10, lang)).fetchall()]
     assert got == want, (query, got[:3], want[:3])
@@ -714,12 +714,12 @@ def test_axiomatic_vs_oracle(plain_index, con, query, lang):
         axiomatic_f2log_oracle_sql,
     )
 
-    for meth, osql in [
-        (plain_index.axiomatic_f2exp_topk, axiomatic_f2exp_oracle_sql),
-        (plain_index.axiomatic_f2log_topk, axiomatic_f2log_oracle_sql),
+    for name, osql in [
+        ("f2exp", axiomatic_f2exp_oracle_sql),
+        ("f2log", axiomatic_f2log_oracle_sql),
     ]:
-        got = [(r["doc_id"], r["score"])
-               for r in meth(query, 10, lang).collect()]
+        got = [(r["doc_id"], r["score"]) for r in
+               plain_index.similarity_topk(query, name, 10, lang).collect()]
         want = [tuple(w) for w in con.execute(osql(query, 10, lang)).fetchall()]
         assert got == want, (query, got[:3], want[:3])
 
@@ -727,7 +727,7 @@ def test_axiomatic_vs_oracle(plain_index, con, query, lang):
 def test_axiomatic_f2_tfn_bounded(plain_index):
     # the F2 growth function is < 1 for every tf, so no per-term
     # contribution can exceed its idf — scores stay finite and ordered
-    rows = plain_index.axiomatic_f2exp_topk("hash join", 5).collect()
+    rows = plain_index.similarity_topk("hash join", "f2exp", 5).collect()
     assert rows == sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))
     assert all(r["score"] > 0 for r in rows)
 
